@@ -1,4 +1,4 @@
-from codebased_spark.graph.pipeline import extract_triples, build_graph  # noqa: F401
+from codebased_spark.graph.pipeline import extract_triples  # noqa: F401
 from codebased_spark.graph.pagerank import pagerank  # noqa: F401
 from codebased_spark.graph.views import register_views, sql  # noqa: F401
 from codebased_spark.graph.triangles import triangles, triangle_counts  # noqa: F401

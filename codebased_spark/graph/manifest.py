@@ -12,19 +12,30 @@ Design:
   n_buckets). A bucket is the unit of lineage, commit, retry, and
   incremental recompute (the reference's unit is a file; at 10^12 rows a
   per-doc manifest is itself big data, so we coarsen to buckets).
-- Outputs land under {out}/nodes and {out}/edges, partitioned by bucket,
-  written with dynamic partition overwrite — re-running a bucket replaces
-  exactly its own partitions, so task/batch retries are idempotent
-  (entity uids are content hashes, E11, so recomputed rows are identical).
+- Outputs land under {out}/nodes and {out}/edges, partitioned by bucket.
+  A bucket OWNS every row its pages produce (pipeline._materialize_graph
+  with the bucket as owner): its Page rows, a row per entity it
+  references, an ExternalPage stub per link target outside the bucket, and
+  one row per edge it states. Rows shared by several buckets are stored
+  once per bucket, and read_graph merges the copies, so a bucket's
+  partitions depend on its own pages only and rebuilding one bucket never
+  changes what another contributes.
+- Processing a bucket deletes its partition directories and then appends
+  its new rows, so a refreshed bucket with no rows for a table keeps none
+  of its old ones (entity uids are content hashes, E11, so recomputed rows
+  are identical and retries are idempotent).
 - {out}/manifest gets one row per committed bucket: row counts, the
   bucket's aggregate content hash (order-independent XOR of page sha2s —
   the change-detection key), and a run id. The manifest row is appended
-  AFTER the bucket's data is fully written: on crash, uncommitted buckets
-  may have partial data, but resume() rewrites (overwrites) them, so the
-  manifest is the single source of truth.
-- resume_run() processes only buckets absent from the manifest;
-  incremental_update() additionally re-processes buckets whose content
-  hash changed (the bucket-granular analog of sha256 file diffing).
+  AFTER the bucket's data is fully written. A crash before it leaves the
+  bucket uncommitted (run_partitioned reprocesses it) or with an older
+  hash than its pages (incremental_update reprocesses it), and the rerun
+  deletes whatever partial data the crash left, so the manifest is the
+  single source of truth.
+- run_partitioned() processes only buckets that are not live (see
+  _latest_manifest); incremental_update() additionally re-processes
+  buckets whose content hash changed (the bucket-granular analog of
+  sha256 file diffing) and deletes buckets whose pages all vanished.
 
 On a production cluster these three directories are Iceberg tables and the
 data+manifest pair becomes a single atomic snapshot commit; parquet +
@@ -38,11 +49,11 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from codebased_spark.graph.pipeline import extract_triples
+from codebased_spark.graph.pipeline import _materialize_graph, extract_triples
 
 MANIFEST_SCHEMA = T.StructType(
     [
@@ -58,10 +69,13 @@ MANIFEST_SCHEMA = T.StructType(
 )
 
 
+def _bucket_of(n_buckets: int) -> Column:
+    """The bucket of a row's `url` column."""
+    return F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
+
+
 def with_bucket(pages: DataFrame, n_buckets: int) -> DataFrame:
-    return pages.withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-    )
+    return pages.withColumn("bucket", _bucket_of(n_buckets))
 
 
 def bucket_content_hashes(pages_b: DataFrame) -> DataFrame:
@@ -84,6 +98,22 @@ def committed_buckets(spark: SparkSession, out_dir: str) -> DataFrame:
         return spark.createDataFrame([], MANIFEST_SCHEMA)
 
 
+def _latest_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
+    """(bucket, content_hash, live) from each bucket's latest manifest row.
+
+    `live` is the one definition of a committed bucket: its latest row is
+    a real commit. A NULL-hash tombstone (the bucket's pages vanished and
+    its partitions are deleted, or are about to be after a crash) makes it
+    not live, whatever older rows say.
+    """
+    return (
+        committed_buckets(spark, out_dir)
+        .groupBy("bucket")
+        .agg(F.max_by("content_hash", "committed_at").alias("content_hash"))
+        .withColumn("live", F.col("content_hash").isNotNull())
+    )
+
+
 @dataclass
 class RunReport:
     run_id: str
@@ -97,14 +127,16 @@ def _process_buckets(
     pages_b: DataFrame,
     gazetteer: DataFrame,
     out_dir: str,
+    n_buckets: int,
     buckets: list[int],
     run_id: str,
     batch_size: int,
     max_batches: int | None,
 ) -> list[int]:
-    """Run the pipeline per batch of buckets; overwrite their partitions,
-    then append manifest rows. Returns the buckets actually committed."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    """Run the pipeline per batch of buckets and replace each bucket's
+    output: delete its partitions, append the rows it owns, then append
+    its manifest row. Returns the buckets actually committed."""
+    bucket = _bucket_of(n_buckets)
     done: list[int] = []
     batches = [
         buckets[i : i + batch_size] for i in range(0, len(buckets), batch_size)
@@ -114,112 +146,40 @@ def _process_buckets(
     for batch in batches:
         sub = pages_b.where(F.col("bucket").isin(batch))
         res = extract_triples(spark, sub, gazetteer, persist_triples=True)
-        # Attribute every output row to the bucket(s) whose pages produced
-        # it. Entity nodes are referenced from many buckets — they get one
-        # row per referencing bucket, so overwriting one bucket's
-        # partitions never destroys another bucket's lineage. A PAGE node
-        # is owned by exactly its url's bucket; a foreign bucket that
-        # references it (LINKS_TO) stores an ExternalPage STUB row instead
-        # of a copy of the real row — so deleting the owning bucket
-        # leaves the still-linked-to url represented as external, exactly
-        # as if the batches had been processed one bucket at a time
-        # (read_graph's priority dedup prefers the real row while both
-        # exist).
-        url_buckets = sub.select("url", "bucket")
-        page_ids = url_buckets.select(
-            "bucket", F.concat(F.lit("page:"), F.col("url")).alias("id")
-        )
-        t_b = res.triples.join(url_buckets, "url")
-        ref_ids = (
-            t_b.select("bucket", F.col("subj").alias("id"))
-            .unionByName(t_b.select("bucket", F.col("obj").alias("id")))
-            .distinct()
-        )
-        owners = page_ids.select(
-            "id", F.col("bucket").alias("owner_bucket")
-        )
-        ref_owned = ref_ids.join(owners, "id", "left")
-        foreign_page_refs = ref_owned.where(
-            F.col("owner_bucket").isNotNull()
-            & (F.col("owner_bucket") != F.col("bucket"))
-        ).select("bucket", "id")
-        node_buckets = (
-            ref_owned.where(
-                F.col("owner_bucket").isNull()
-                | (F.col("owner_bucket") == F.col("bucket"))
-            )
-            .select("bucket", "id")
-            .unionByName(page_ids)
-            .distinct()
-        )
-        stub_name = F.regexp_replace("id", "^page:", "")
-        stub_rows = foreign_page_refs.select(
-            "id",
-            F.sha2(
-                F.concat_ws(":", F.lit("ExternalPage"), stub_name), 256
-            ).alias("uid"),
-            stub_name.alias("name"),
-            F.lit("ExternalPage").alias("type"),
-            F.lit(None).cast("string").alias("source_url"),
-            F.lit(None).cast("map<string,string>").alias("meta"),
+        graph = _materialize_graph(res.pages, res.canon, res.triples, bucket)
+        _delete_bucket_partitions(spark, out_dir, batch)
+        counts = bucket_content_hashes(sub).join(
+            res.triples.groupBy(bucket.alias("bucket")).agg(
+                F.count(F.lit(1)).alias("n_triples")
+            ),
             "bucket",
+            "left",
         )
-        nodes = res.nodes.join(node_buckets, "id").unionByName(
-            stub_rows.select(*res.nodes.columns, "bucket")
-        )
-        edges = res.edges.join(
-            url_buckets.select(F.col("url").alias("_u"), F.col("bucket")),
-            F.element_at(F.col("meta"), "source_url") == F.col("_u"),
-        ).select("src", "dst", "rel_type", "meta", "bucket")
-        (
-            nodes.write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(f"{out_dir}/nodes")
-        )
-        (
-            edges.write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(f"{out_dir}/edges")
-        )
-        # lineage/counters, computed from what was actually written
-        nodes_w = spark.read.parquet(f"{out_dir}/nodes").where(
-            F.col("bucket").isin(batch)
-        )
-        edges_w = spark.read.parquet(f"{out_dir}/edges").where(
-            F.col("bucket").isin(batch)
-        )
-        stats = (
-            bucket_content_hashes(sub)
-            .join(
-                nodes_w.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_nodes")),
+        for table, df in zip(("nodes", "edges"), graph):
+            (
+                df.withColumnRenamed("owner", "bucket")
+                .write.mode("append")
+                .partitionBy("bucket")
+                .parquet(f"{out_dir}/{table}")
+            )
+            # lineage counters, computed from what was actually written
+            written = spark.read.parquet(f"{out_dir}/{table}").where(
+                F.col("bucket").isin(batch)
+            )
+            counts = counts.join(
+                written.groupBy("bucket").agg(F.count(F.lit(1)).alias(f"n_{table}")),
                 "bucket",
                 "left",
             )
-            .join(
-                edges_w.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_edges")),
-                "bucket",
-                "left",
-            )
-        )
-        n_triples_by_bucket = (
-            res.triples.join(
-                sub.select("url", "bucket"), "url", "left"
-            )
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n_triples"))
-        )
-        manifest_rows = (
-            stats.join(n_triples_by_bucket, "bucket", "left")
-            .select(
-                "bucket",
-                "n_pages",
-                F.coalesce("n_triples", F.lit(0)).alias("n_triples"),
-                F.coalesce("n_nodes", F.lit(0)).alias("n_nodes"),
-                F.coalesce("n_edges", F.lit(0)).alias("n_edges"),
-                "content_hash",
-                F.lit(run_id).alias("run_id"),
-                F.lit(time.time()).alias("committed_at"),
-            )
+        manifest_rows = counts.select(
+            "bucket",
+            "n_pages",
+            F.coalesce("n_triples", F.lit(0)).alias("n_triples"),
+            F.coalesce("n_nodes", F.lit(0)).alias("n_nodes"),
+            F.coalesce("n_edges", F.lit(0)).alias("n_edges"),
+            "content_hash",
+            F.lit(run_id).alias("run_id"),
+            F.lit(time.time()).alias("committed_at"),
         )
         manifest_rows.write.mode("append").parquet(f"{out_dir}/manifest")
         # batch fully materialized (partitions + manifest written) — drop
@@ -246,23 +206,20 @@ def run_partitioned(
     """
     run_id = uuid.uuid4().hex[:12]
     pages_b = with_bucket(pages, n_buckets)
-    # committed = latest manifest row is a real commit — the SAME definition
-    # read_graph gates on. A bucket whose latest row is a NULL-hash tombstone
-    # (vanished, partitions deleted) must be rebuilt here if its pages are
-    # back in the corpus; counting any manifest row would skip it forever
-    # while read_graph returns nothing for its pages.
+    # live, not "has a manifest row": a tombstoned bucket whose pages are
+    # back in the corpus must be rebuilt, or read_graph would return
+    # nothing for its pages forever
     committed = [
         r.bucket
-        for r in committed_buckets(spark, out_dir)
-        .groupBy("bucket")
-        .agg(F.max_by("content_hash", "committed_at").alias("_h"))
-        .where(F.col("_h").isNotNull())
+        for r in _latest_manifest(spark, out_dir)
+        .where("live")
         .select("bucket")
         .collect()
     ]
     todo = [b for b in range(n_buckets) if b not in committed]
     done = _process_buckets(
-        spark, pages_b, gazetteer, out_dir, todo, run_id, batch_size, max_batches
+        spark, pages_b, gazetteer, out_dir, n_buckets, todo, run_id,
+        batch_size, max_batches,
     )
     return RunReport(run_id=run_id, buckets_processed=done, buckets_skipped=len(committed))
 
@@ -279,7 +236,7 @@ def incremental_update(
 
     Bucket-granular restatement of the reference's sha256 file diff
     (incremental.py:159-214): current per-bucket hash vs manifest hash;
-    changed buckets get their partitions overwritten and a fresh manifest
+    changed buckets get their partitions replaced and a fresh manifest
     row (latest row per bucket wins on read).
     """
     run_id = uuid.uuid4().hex[:12]
@@ -287,13 +244,9 @@ def incremental_update(
     current = bucket_content_hashes(pages_b).select(
         "bucket", F.col("content_hash").alias("new_hash")
     )
-    manifest = committed_buckets(spark, out_dir)
-    latest = (
-        manifest.groupBy("bucket")
-        .agg(F.max_by("content_hash", "committed_at").alias("content_hash"))
-    )
+    latest = _latest_manifest(spark, out_dir)
     todo_df = current.join(latest, "bucket", "left").where(
-        F.col("content_hash").isNull()
+        ~F.coalesce("live", F.lit(False))
         | (F.col("content_hash") != F.col("new_hash"))
     )
     todo = sorted(r.bucket for r in todo_df.select("bucket").collect())
@@ -316,12 +269,10 @@ def incremental_update(
     # skipped forever. In the Iceberg framing, delete + tombstone is one
     # atomic snapshot; tombstone-first is the closest parquet analog.
     absent = (
-        latest.join(current, "bucket", "left_anti")
-        .select("bucket", "content_hash")
-        .collect()
+        latest.join(current, "bucket", "left_anti").select("bucket", "live").collect()
     )
-    vanished = sorted(r.bucket for r in absent if r.content_hash is not None)
-    stale_tombstoned = sorted(r.bucket for r in absent if r.content_hash is None)
+    vanished = sorted(r.bucket for r in absent if r.live)
+    stale_tombstoned = sorted(r.bucket for r in absent if not r.live)
     if vanished:
         tombstones = spark.createDataFrame(
             [
@@ -334,7 +285,8 @@ def incremental_update(
     if vanished or stale_tombstoned:
         _delete_bucket_partitions(spark, out_dir, vanished + stale_tombstoned)
     done = _process_buckets(
-        spark, pages_b, gazetteer, out_dir, todo, run_id, batch_size, None
+        spark, pages_b, gazetteer, out_dir, n_buckets, todo, run_id,
+        batch_size, None,
     )
     return RunReport(
         run_id=run_id,
@@ -344,31 +296,34 @@ def incremental_update(
     )
 
 
+def _delete_paths(spark: SparkSession, paths: list[str]) -> None:
+    """Recursively delete `paths` (missing ones are skipped) through the
+    Hadoop FileSystem API, so the same call works on local, HDFS and S3A
+    paths."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    for p in paths:
+        path = jvm.org.apache.hadoop.fs.Path(p)
+        path.getFileSystem(conf).delete(path, True)
+
+
 def _delete_bucket_partitions(
     spark: SparkSession, out_dir: str, buckets: list[int]
 ) -> None:
-    """Remove bucket=B partition directories from nodes/ and edges/.
-
-    Uses the Hadoop FileSystem API so the same call works on HDFS/S3A in
-    cluster deployments; the Iceberg equivalent is one
-    `DELETE FROM t WHERE bucket IN (...)` snapshot commit."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    for table in ("nodes", "edges"):
-        for b in buckets:
-            path = jvm.org.apache.hadoop.fs.Path(f"{out_dir}/{table}/bucket={b}")
-            fs = path.getFileSystem(conf)
-            fs.delete(path, True)
+    """Remove bucket=B partition directories from nodes/ and edges/. The
+    Iceberg equivalent is one `DELETE FROM t WHERE bucket IN (...)`
+    snapshot commit."""
+    _delete_paths(
+        spark,
+        [f"{out_dir}/{t}/bucket={b}" for t in ("nodes", "edges") for b in buckets],
+    )
 
 
 def clear_graph(spark: SparkSession, out_dir: str) -> None:
     """Full-rebuild reset (reference S11, service.py:187-217 clear_graph):
     drop nodes/edges/manifest so the next run starts from scratch. The
     Iceberg equivalent is DROP TABLE/TRUNCATE in one catalog transaction."""
-    import shutil
-
-    for sub in ("nodes", "edges", "manifest"):
-        shutil.rmtree(f"{out_dir}/{sub}", ignore_errors=True)
+    _delete_paths(spark, [f"{out_dir}/{t}" for t in ("nodes", "edges", "manifest")])
 
 
 def graph_stats(nodes: DataFrame, edges: DataFrame) -> DataFrame:
@@ -387,26 +342,21 @@ def graph_stats(nodes: DataFrame, edges: DataFrame) -> DataFrame:
 def read_graph(spark: SparkSession, out_dir: str) -> tuple[DataFrame, DataFrame]:
     """Committed nodes/edges only (manifest-gated), deduped across buckets.
 
-    Cross-bucket duplicates exist by design (the same entity can be
-    referenced from many buckets). The node dedup is PRIORITY-based, not
-    dropDuplicates: a page referenced from another bucket's LINKS_TO has an
-    ExternalPage *stub* row in that bucket, and the real Page row in its
-    own — the real row must win deterministically (and after the owning
-    bucket is deleted, the surviving stub is exactly the right
-    representation of a still-linked-to external url).
+    Cross-bucket duplicates exist by design (each bucket stores the
+    entities it references and the edges it states). The node dedup is
+    PRIORITY-based, not dropDuplicates: a page referenced from another
+    bucket's LINKS_TO has an ExternalPage *stub* row in that bucket, and the
+    real Page row in its own — the real row must win deterministically (and
+    after the owning bucket is deleted, the surviving stub is exactly the
+    right representation of a still-linked-to external url). An edge keeps
+    the meta of its smallest source url across buckets, as one global
+    build would.
     """
     from pyspark.sql import Window
 
-    # a bucket is committed iff its LATEST manifest row is a real commit;
-    # a latest-row NULL-hash tombstone excludes it even if a crash left
-    # its partition dirs behind (incremental_update repairs those later)
-    committed = (
-        committed_buckets(spark, out_dir)
-        .groupBy("bucket")
-        .agg(F.max_by("content_hash", "committed_at").alias("_h"))
-        .where(F.col("_h").isNotNull())
-        .select("bucket")
-    )
+    # a tombstoned bucket is excluded even if a crash left its partition
+    # dirs behind (incremental_update repairs those later)
+    committed = _latest_manifest(spark, out_dir).where("live").select("bucket")
     w = Window.partitionBy("id").orderBy(
         F.when(F.col("type") == "ExternalPage", 1).otherwise(0), F.col("type")
     )

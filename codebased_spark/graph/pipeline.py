@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from codebased_spark.extract.html_text import href_targets, with_text
@@ -41,6 +41,10 @@ class GraphResult:
     nodes: DataFrame  # (id, uid, name, type, meta)
     edges: DataFrame  # (src, dst, rel_type, meta)
     mentions: DataFrame  # (url, surface, mstart, mend, exact, entity_id)
+    # _materialize_graph's inputs, for callers that split the graph by an
+    # owner column of their own (the manifest's buckets)
+    pages: DataFrame  # the pages that became Page nodes
+    canon: DataFrame  # (surface, entity_id, canonical_id, entity_type, link_score)
     # internal persisted fan-out points (flat scan, canonical map) — SQL
     # cache entries live in the CacheManager until explicitly unpersisted,
     # so loops that run the pipeline repeatedly (benchmark warmups,
@@ -384,21 +388,34 @@ def extract_triples(
         # narrow dedup shuffles, never the scan UDFs.
         triples = triples.persist(StorageLevel.MEMORY_AND_DISK)
 
-    nodes, edges = _materialize_graph(pages, canon, triples)
+    # one owner for the whole batch: the global graph
+    nodes, edges = (
+        df.drop("owner")
+        for df in _materialize_graph(pages, canon, triples, F.lit(0))
+    )
     cached = (
         (flat, canon, triples) if (persist and persist_triples)
         else (flat, canon) if persist
         else ()
     )
     return GraphResult(
-        triples=triples, nodes=nodes, edges=edges, mentions=linked, cached=cached
+        triples=triples, nodes=nodes, edges=edges, mentions=linked,
+        pages=pages, canon=canon, cached=cached,
     )
 
 
 def _materialize_graph(
-    pages: DataFrame, canon: DataFrame, triples: DataFrame
+    pages: DataFrame, canon: DataFrame, triples: DataFrame, owner: Column
 ) -> tuple[DataFrame, DataFrame]:
-    """Typed node/edge tables with deterministic content-hash uids.
+    """Typed node/edge tables with deterministic content-hash uids, each
+    row tagged with the `owner` of the url that produced it.
+
+    `owner` is a Column over `url` naming the unit of output a row belongs
+    to (a constant for one global graph, the bucket for the manifest). Each
+    owner gets its own Page rows, one row per entity its triples reference,
+    an ExternalPage stub per LINKS_TO target that is not one of its own
+    pages, and one edge per (src, dst, rel_type) it emits, so replacing an
+    owner's rows never touches what another owner stated.
 
     uid = sha2(type:name, 256) — the determinism that makes task retries and
     re-runs idempotent (reference E11, python.py:445-462). Dedup is
@@ -414,20 +431,22 @@ def _materialize_graph(
         page_meta_col(F.col("html")) if "html" in pages.columns else null_meta
     )
     page_nodes = pages.select(
+        owner.alias("owner"),
         F.concat(F.lit("page:"), F.col("url")).alias("id"),
         F.col("url").alias("name"),
         F.lit("Page").alias("type"),
         F.col("url").alias("source_url"),
         meta_expr.alias("meta"),
     )
+    triples = triples.withColumn("owner", owner)
     # only entities actually referenced by a triple become nodes (the
     # reference materializes extracted entities, not the whole gazetteer)
     used_ids = (
         triples.where(F.col("pred") != "LINKS_TO")
-        .select(F.col("obj").alias("canonical_id"))
+        .select("owner", F.col("obj").alias("canonical_id"))
         .union(
             triples.where(~F.col("pred").isin("LINKS_TO", "MENTIONS")).select(
-                F.col("subj").alias("canonical_id")
+                "owner", F.col("subj").alias("canonical_id")
             )
         )
         .distinct()
@@ -439,8 +458,8 @@ def _materialize_graph(
     # entity nodes carry per-entity metadata (E6 rich flags analog):
     # alias-count and the best link confidence that produced the name
     entity_nodes = (
-        canon.join(used_ids, "canonical_id", "left_semi")
-        .groupBy(F.col("canonical_id").alias("id"))
+        canon.join(used_ids, "canonical_id")
+        .groupBy("owner", F.col("canonical_id").alias("id"))
         .agg(
             F.max_by(
                 F.struct(F.col("surface"), F.col("entity_type")),
@@ -450,6 +469,7 @@ def _materialize_graph(
             F.max("link_score").alias("_best_score"),
         )
         .select(
+            "owner",
             "id",
             F.col("best.surface").alias("name"),
             F.col("best.entity_type").alias("type"),
@@ -460,46 +480,43 @@ def _materialize_graph(
             ).alias("meta"),
         )
     )
-    # LINKS_TO targets outside the corpus → external Page stubs (J7)
+    # LINKS_TO targets outside the owner's pages → external Page stubs (J7)
     stub_pages = (
         triples.where(F.col("pred") == "LINKS_TO")
-        .select(F.col("obj").alias("id"))
+        .select("owner", F.col("obj").alias("id"))
         .distinct()
-        .join(page_nodes.select("id"), "id", "left_anti")
+        .join(page_nodes.select("owner", "id"), ["owner", "id"], "left_anti")
         .select(
+            "owner",
             "id",
             F.regexp_replace("id", "^page:", "").alias("name"),
             F.lit("ExternalPage").alias("type"),
             F.lit(None).cast("string").alias("source_url"),
-            F.lit(None).cast("map<string,string>").alias("meta"),
+            null_meta.alias("meta"),
         )
     )
     nodes = (
         page_nodes.unionByName(entity_nodes).unionByName(stub_pages)
-        .dropDuplicates(["id"])
+        .dropDuplicates(["owner", "id"])
         .withColumn("uid", F.sha2(F.concat_ws(":", "type", "name"), 256))
-        .select("id", "uid", "name", "type", "source_url", "meta")
+        .select("id", "uid", "name", "type", "source_url", "meta", "owner")
     )
-    # deterministic representative: min(url) per edge key, not whichever
-    # row dropDuplicates happens to see first (task order varies between
-    # runs); the meta map is built AFTER the aggregate so the shuffle
-    # carries one url string, not a map
+    # deterministic representative: min(url) per owner and edge key, not
+    # whichever row dropDuplicates happens to see first (task order varies
+    # between runs); the meta map is built AFTER the aggregate so the
+    # shuffle carries one url string, not a map
     edges = (
         triples.groupBy(
             F.col("subj").alias("src"),
             F.col("obj").alias("dst"),
             F.col("pred").alias("rel_type"),
+            "owner",
         )
         .agg(F.min("url").alias("_url"))
         .select(
             "src", "dst", "rel_type",
             F.create_map(F.lit("source_url"), F.col("_url")).alias("meta"),
+            "owner",
         )
     )
     return nodes, edges
-
-
-def build_graph(
-    spark: SparkSession, pages: DataFrame, gazetteer: DataFrame, **kw
-) -> GraphResult:
-    return extract_triples(spark, pages, gazetteer, **kw)

@@ -247,3 +247,74 @@ def test_run_partitioned_rebuilds_tombstoned_bucket(
         nodes.where(F.col("id").isin(stale_ids) & (F.col("type") == "Page")).count()
         == len(stale_ids)
     )
+
+
+# Two pages in different buckets (1 and 2 of 4) that state the same facts:
+# refreshing ONE of them must leave the graph a from-scratch build of the
+# final snapshot would produce.
+_STATED = b"<html><body><p>Acme Systems acquired Flex Engine.</p></body></html>"
+_TWIN_URLS = ("http://ex0.com/a", "http://ex1.com/a")
+
+
+def _twin_snapshot(spark, ex0_html):
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {"url": list(_TWIN_URLS), "html": [ex0_html, _STATED], "lang": ["en", "en"]}
+        )
+    )
+
+
+@pytest.fixture(scope="module")
+def twin_build(spark, tmp_path_factory):
+    """(gazetteer, graph dir) of a from-scratch build of both twins."""
+    import pandas as pd
+
+    from codebased_spark.graph.manifest import with_bucket
+
+    gaz = spark.createDataFrame(
+        pd.DataFrame(
+            [("Acme Systems", "e:acme", "Org", 1.0), ("Flex Engine", "e:flex", "Product", 1.0)],
+            columns=["surface_form", "canonical_id", "entity_type", "weight"],
+        )
+    )
+    before = _twin_snapshot(spark, _STATED)
+    buckets = {r.url: r.bucket for r in with_bucket(before, 4).collect()}
+    assert [buckets[u] for u in _TWIN_URLS] == [1, 2]
+    out = str(tmp_path_factory.mktemp("twins"))
+    run_partitioned(spark, before, gaz, out, n_buckets=4, batch_size=4)
+    return gaz, out
+
+
+def _twin_refresh_vs_scratch(spark, twin_build, tmp_path, edited_html):
+    import shutil
+
+    gaz, built = twin_build
+    after = _twin_snapshot(spark, edited_html)
+    out, fresh = str(tmp_path / "incr"), str(tmp_path / "fresh")
+    shutil.copytree(built, out)
+    rep = incremental_update(spark, after, gaz, out, n_buckets=4, batch_size=4)
+    assert rep.buckets_processed == [1]
+    run_partitioned(spark, after, gaz, fresh, n_buckets=4, batch_size=4)
+    return _graph_sets(spark, out), _graph_sets(spark, fresh)
+
+
+def test_refresh_keeps_edge_stated_in_unrefreshed_bucket(spark, twin_build, tmp_path):
+    """An edge stated by pages in two buckets must survive a refresh of
+    the bucket that held its smallest source url."""
+    incr, scratch = _twin_refresh_vs_scratch(
+        spark, twin_build, tmp_path, b"<html><body><p>Acme Systems is here.</p></body></html>"
+    )
+    assert ("e:acme", "e:flex", "ACQUIRED") in scratch[1]
+    assert incr == scratch
+
+
+def test_refresh_drops_edges_of_emptied_page(spark, twin_build, tmp_path):
+    """A refreshed bucket whose new output has no edges must lose its old
+    edges (the edited page's MENTIONS)."""
+    incr, scratch = _twin_refresh_vs_scratch(
+        spark, twin_build, tmp_path, b"<html><body><p>Nothing here today.</p></body></html>"
+    )
+    assert ("page:http://ex0.com/a", "e:acme", "MENTIONS") not in scratch[1]
+    assert incr == scratch
