@@ -22,6 +22,24 @@ def pages_gaz(spark, corpus):
     return spark.createDataFrame(corpus.pages), spark.createDataFrame(corpus.gazetteer)
 
 
+@pytest.fixture(scope="module")
+def built(spark, pages_gaz, tmp_path_factory):
+    """A from-scratch build of the corpus, all buckets in one batch. Read
+    it as is; copy it (_copy_of) before updating it."""
+    pages, gaz = pages_gaz
+    out = str(tmp_path_factory.mktemp("built"))
+    run_partitioned(spark, pages, gaz, out, n_buckets=N_BUCKETS, batch_size=N_BUCKETS)
+    return out
+
+
+def _copy_of(built, tmp_path_factory, name):
+    import shutil
+
+    out = str(tmp_path_factory.mktemp(name) / "graph")
+    shutil.copytree(built, out)
+    return out
+
+
 def _graph_sets(spark, out):
     nodes, edges = read_graph(spark, out)
     return (
@@ -53,11 +71,9 @@ def test_interrupted_run_resumes_to_same_graph(spark, pages_gaz, tmp_path_factor
     assert _graph_sets(spark, partial) == _graph_sets(spark, full)
 
 
-def test_manifest_lineage_counters(spark, pages_gaz, tmp_path_factory):
+def test_manifest_lineage_counters(spark, pages_gaz, built):
     pages, gaz = pages_gaz
-    out = str(tmp_path_factory.mktemp("lineage"))
-    run_partitioned(spark, pages, gaz, out, n_buckets=N_BUCKETS, batch_size=N_BUCKETS)
-    m = committed_buckets(spark, out).toPandas()
+    m = committed_buckets(spark, built).toPandas()
     assert len(m) == N_BUCKETS
     assert m.n_pages.sum() == pages.count()
     assert (m.n_pages > 0).all()
@@ -79,13 +95,12 @@ def test_graph_stats_and_clear(spark, pages_gaz, tmp_path_factory):
 
 
 def test_incremental_update_reprocesses_only_changed_buckets(
-    spark, pages_gaz, corpus, tmp_path_factory
+    spark, pages_gaz, corpus, built, tmp_path_factory
 ):
     import pandas as pd
 
     pages, gaz = pages_gaz
-    out = str(tmp_path_factory.mktemp("incr"))
-    run_partitioned(spark, pages, gaz, out, n_buckets=N_BUCKETS, batch_size=N_BUCKETS)
+    out = _copy_of(built, tmp_path_factory, "incr")
 
     # unchanged input -> nothing to do
     rep = incremental_update(spark, pages, gaz, out, n_buckets=N_BUCKETS)
@@ -104,7 +119,7 @@ def test_incremental_update_reprocesses_only_changed_buckets(
 
 
 def test_incremental_update_deletes_vanished_buckets(
-    spark, pages_gaz, corpus, tmp_path_factory
+    spark, pages_gaz, corpus, built, tmp_path_factory
 ):
     """Buckets whose pages all disappear must be wiped from the committed
     graph (VERDICT r1 #6: stale-bucket leak — removed pages survived
@@ -114,8 +129,7 @@ def test_incremental_update_deletes_vanished_buckets(
     from codebased_spark.graph.manifest import with_bucket
 
     pages, gaz = pages_gaz
-    out = str(tmp_path_factory.mktemp("vanish"))
-    run_partitioned(spark, pages, gaz, out, n_buckets=N_BUCKETS, batch_size=N_BUCKETS)
+    out = _copy_of(built, tmp_path_factory, "vanish")
 
     # drop every page of one bucket from the input corpus
     victim = 0
@@ -154,7 +168,7 @@ def test_incremental_update_deletes_vanished_buckets(
     assert back.where(F.col("type") == "Page").count() == len(stale_ids)
 
 
-def test_tombstone_crash_window_is_safe(spark, pages_gaz, tmp_path_factory):
+def test_tombstone_crash_window_is_safe(spark, pages_gaz, built, tmp_path_factory):
     """ADVICE r2 (medium): simulate a crash between the tombstone append and
     the partition delete. The latest-row tombstone must already hide the
     bucket from read_graph, and the next incremental run must repair by
@@ -170,8 +184,7 @@ def test_tombstone_crash_window_is_safe(spark, pages_gaz, tmp_path_factory):
     )
 
     pages, gaz = pages_gaz
-    out = str(tmp_path_factory.mktemp("crash"))
-    run_partitioned(spark, pages, gaz, out, n_buckets=N_BUCKETS, batch_size=N_BUCKETS)
+    out = _copy_of(built, tmp_path_factory, "crash")
 
     victim = 1
     pages_b = with_bucket(pages, N_BUCKETS)
@@ -213,7 +226,7 @@ def test_tombstone_crash_window_is_safe(spark, pages_gaz, tmp_path_factory):
 
 
 def test_run_partitioned_rebuilds_tombstoned_bucket(
-    spark, pages_gaz, tmp_path_factory
+    spark, pages_gaz, built, tmp_path_factory
 ):
     """run_partitioned must use the SAME committed definition as read_graph
     (latest manifest row non-null): a tombstoned bucket whose pages are back
@@ -225,8 +238,7 @@ def test_run_partitioned_rebuilds_tombstoned_bucket(
     from codebased_spark.graph.manifest import with_bucket
 
     pages, gaz = pages_gaz
-    out = str(tmp_path_factory.mktemp("rebuild"))
-    run_partitioned(spark, pages, gaz, out, n_buckets=N_BUCKETS, batch_size=N_BUCKETS)
+    out = _copy_of(built, tmp_path_factory, "rebuild")
 
     victim = 2
     pages_b = with_bucket(pages, N_BUCKETS)

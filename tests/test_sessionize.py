@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import time
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -57,7 +59,19 @@ def test_sessionize_stream_matches_batch_closed_sessions(spark, tiny_events, tmp
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # the state's processing-time timeout makes Spark run no-data batches
+    # forever, so an availableNow query never terminates (nor does
+    # processAllAvailable return): wait up to 120 s for the batch that
+    # read the input, then stop the query, which would otherwise keep
+    # taking task slots from every later test
+    try:
+        deadline = time.time() + 120
+        while time.time() < deadline and not any(
+            p["numInputRows"] for p in q.recentProgress
+        ):
+            time.sleep(0.2)
+    finally:
+        q.stop()
     streamed = {
         (r.user_id, r.session_start, r.session_end, r.n_events)
         for r in spark.sql("select * from sessions_out").collect()

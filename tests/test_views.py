@@ -4,6 +4,8 @@ and the canned QUERY_LIBRARY analogs."""
 
 from __future__ import annotations
 
+import dataclasses
+
 import pytest
 
 from codebased_spark.graph.pipeline import extract_triples
@@ -23,8 +25,15 @@ def graph_views(spark):
     pages = spark.createDataFrame(c.pages)
     gaz = spark.createDataFrame(c.gazetteer)
     res = extract_triples(spark, pages, gaz)
-    register_views(spark, nodes=res.nodes, edges=res.edges)
-    return res
+    # materialize the graph once, as a served graph is: the canned queries
+    # reference the views several times each (impact() once per hop), and
+    # lazy views would rerun extraction at every reference
+    nodes, edges = res.nodes.persist(), res.edges.persist()
+    register_views(spark, nodes=nodes, edges=edges)
+    yield dataclasses.replace(res, nodes=nodes, edges=edges)
+    nodes.unpersist()
+    edges.unpersist()
+    res.release()
 
 
 def test_adhoc_sql_auto_limit(spark, graph_views):
