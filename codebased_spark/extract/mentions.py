@@ -83,8 +83,9 @@ def _quoted_candidates(text: str) -> list[tuple[str, int, int]]:
 # E10 in full: the reference emits VARIABLE candidates through a FAMILY of
 # heuristics (constant detection, type inference, private-name skip —
 # python.py variable emit); the web analog is this registry of fuzzy
-# candidate detectors. The pipeline default stays ("capseq",) — the
-# proper-name shape — and callers opt into more recall per corpus.
+# candidate detectors. The pipeline uses the default ("capseq",) — the
+# proper-name shape; callers that need more recall on a corpus choose
+# other families through with_mentions(heuristics=...).
 CANDIDATE_HEURISTICS = {
     "capseq": _capseq_candidates,
     "allcaps": _allcaps_candidates,

@@ -24,11 +24,14 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from codebased_spark.extract.html_text import href_targets, with_text
 from codebased_spark.extract.mentions import with_mentions
+from codebased_spark.extract.metadata import page_meta_col
+from codebased_spark.extract.urlops import base_href_col, resolve_url_col
 from codebased_spark.link.alias import build_alias_table, link_fuzzy_mentions
 from codebased_spark.link.cc import connected_components
 
@@ -67,37 +70,34 @@ def extract_triples(
     spark: SparkSession,
     pages: DataFrame,
     gazetteer: DataFrame,
-    fuzzy_threshold: float = 0.55,
-    use_given_text: bool = False,
-    persist: bool = True,
+    *,
     max_html_bytes: int | None = 10 * 1024 * 1024,
     external_blocklist: list[str] | None = None,
     max_broadcast_surfaces: int = 2_000_000,
-    mention_heuristics: tuple[str, ...] | None = None,
-    dedupe_captures: bool = False,
-    canonical_collapse: bool = False,
     persist_triples: bool = False,
     context_features: bool = False,
-    resolve_links: bool = True,
 ) -> GraphResult:
-    """Run extraction + linking + canonicalization.
+    """Run extraction + linking + canonicalization over pages
+    `(url, html, lang, ...)`, one row per page.
 
-    `persist=True` (default) caches the two fan-out points — the scanned
-    extraction output (consumed by mention-, relation- and node-building
-    branches) and the canonical surface map — at MEMORY_AND_DISK. Without
-    this every downstream branch re-runs the scan UDFs over the corpus
-    (measured 2.5x end-to-end at 20k docs). At cluster scale the same
-    role is played by the manifest runner materializing per-bucket output;
-    MEMORY_AND_DISK spills rather than OOMs on big partitions.
+    Page identity is settled BEFORE this call, by the caller: for a
+    recrawled corpus, `sources.recrawl.latest_captures(pages)
+    .drop("n_captures")` first (latest capture wins per url), then
+    `sources.canonical.collapse_canonical(pages).drop("src_url",
+    "n_variants")` (declared variants collapse onto their
+    <link rel="canonical"> target), as the jobs under jobs/ do.
 
-    `mention_heuristics` selects the fuzzy-candidate detector family
-    (extract/mentions.CANDIDATE_HEURISTICS — E10 in full: capseq /
-    allcaps / quoted); None keeps the proper-name default.
+    The two fan-out points — the flat extraction output (consumed by the
+    mention-, relation- and node-building branches) and the canonical
+    surface map — are always cached at MEMORY_AND_DISK; without this
+    every downstream branch re-runs the scan UDFs over the corpus
+    (measured 2.5x end-to-end at 20k docs). MEMORY_AND_DISK spills rather
+    than OOMs on big partitions. Callers must `release()` the result once
+    its DataFrames are consumed, or the cache entries live for the rest
+    of the session.
 
-    `dedupe_captures` / `canonical_collapse` are the two opt-in identity
-    pre-steps: latest capture wins per url (sources/recrawl.py), then
-    declared-variant pages collapse onto their <link rel="canonical">
-    target (sources/canonical.py) — both one combined aggregation each.
+    `persist_triples=True` also caches the triples, for callers that
+    materialize the graph from them (see the note at the persist).
 
     `context_features=True` adds the corpus-context rank feature to fuzzy
     candidate scoring (link/context.py::context_link_bonus): surface- and
@@ -120,62 +120,35 @@ def extract_triples(
     use_join_scan = len(probe) > max_broadcast_surfaces
     surfaces = [] if use_join_scan else [r.alias_key for r in probe]
 
-    # recrawl collapse FIRST (latest warc_ts wins per url) so stale
-    # captures never reach the decode UDF — incremental.py:159-274's
-    # one-row-per-path rule, web-table form (sources/recrawl.py)
-    if dedupe_captures and "warc_ts" in pages.columns:
-        from codebased_spark.sources.recrawl import latest_captures
-
-        content = "html" if "html" in pages.columns else "text"
-        pages = latest_captures(pages, content_col=content).drop("n_captures")
-
-    # canonical collapse second (recrawl first settles WHICH capture of a
-    # variant speaks, then <link rel="canonical"> settles page identity):
-    # triples from declared variants attach to the canonical url
-    if canonical_collapse and "html" in pages.columns:
-        from codebased_spark.sources.canonical import collapse_canonical
-
-        pages = collapse_canonical(pages).drop("src_url", "n_variants")
-
     # size guard before any UDF work (reference base.py:146-149 max_file_size
     # skip): pathological documents are dropped map-side, never decoded
-    if max_html_bytes is not None and not use_given_text:
+    if max_html_bytes is not None:
         pages = pages.where(F.length("html") <= max_html_bytes)
 
-    pages = pages if use_given_text else with_text(pages, "html", "text")
-    # text-only corpora (no html column) simply have no hyperlink edges
-    links_expr = (
-        href_targets(F.col("html"))
-        if "html" in pages.columns
-        else F.array().cast("array<string>")
+    pages = with_text(pages, "html", "text").withColumn(
+        "links", href_targets(F.col("html"))
     )
-    pages = pages.withColumn("links", links_expr)
 
     # LINKS_TO — all languages, pure JVM. The distinct runs on the narrow
     # (url, href) pair; subj ("page:"+url) and the constant pred are
     # projected AFTER the shuffle — at 10^12 rows the dedup shuffle is the
     # dominant byte-mover and must not carry derivable columns.
     #
-    # resolve_links (default on): hrefs resolve to absolute urls per RFC
-    # 3986 against the page's <base href> (or the page url) BEFORE the
-    # dedup, so relative aliases of the same target ("a/b" vs "./a/b")
-    # collapse to one edge — on real crawl HTML most hrefs are relative
-    # and an unresolved link graph silently drops most of its edges.
-    # Absolute hrefs pass through verbatim (fixture oracles unchanged).
-    if resolve_links and "html" in pages.columns:
-        from codebased_spark.extract.urlops import base_href_col, resolve_url_col
-
-        base_tag = base_href_col(F.col("html"))
-        link_base = F.when(base_tag == "", F.col("url")).otherwise(
-            resolve_url_col(F.col("url"), base_tag)
-        )
-        exploded = pages.select(
-            F.col("url"), link_base.alias("_b"), F.explode("links").alias("_h")
-        ).select(
-            "url", resolve_url_col(F.col("_b"), F.col("_h")).alias("href")
-        ).where(F.col("href").rlike("(?i)^https?://"))  # no mailto:/js: edges
-    else:
-        exploded = pages.select(F.col("url"), F.explode("links").alias("href"))
+    # hrefs resolve to absolute urls per RFC 3986 against the page's
+    # <base href> (or the page url) BEFORE the dedup, so relative aliases
+    # of the same target ("a/b" vs "./a/b") collapse to one edge — on real
+    # crawl HTML most hrefs are relative and an unresolved link graph
+    # silently drops most of its edges. Absolute hrefs pass through
+    # verbatim (fixture oracles unchanged).
+    base_tag = base_href_col(F.col("html"))
+    link_base = F.when(base_tag == "", F.col("url")).otherwise(
+        resolve_url_col(F.col("url"), base_tag)
+    )
+    exploded = pages.select(
+        F.col("url"), link_base.alias("_b"), F.explode("links").alias("_h")
+    ).select(
+        "url", resolve_url_col(F.col("_b"), F.col("_h")).alias("href")
+    ).where(F.col("href").rlike("(?i)^https?://"))  # no mailto:/js: edges
     link_triples = (
         exploded
         .distinct()
@@ -187,22 +160,17 @@ def extract_triples(
         )
     )
 
-    from codebased_spark.extract.mentions import DEFAULT_HEURISTICS
-
-    heur = tuple(mention_heuristics) if mention_heuristics else DEFAULT_HEURISTICS
     mention_pages = pages.where(F.col("lang").isin(*MENTION_LANGS))
     if use_join_scan:
         # big-gazetteer fallback: distributed dictionary join, same flat
         # row shape (mentions_join runs the same finish_scan tail)
         from codebased_spark.extract.mentions_join import scan_mentions_join
 
-        flat = scan_mentions_join(
-            mention_pages, alias_table, text_col="text", heuristics=heur
-        )
+        flat = scan_mentions_join(mention_pages, alias_table, text_col="text")
     else:
-        scanned = with_mentions(
-            mention_pages, surfaces, "text", heuristics=heur
-        ).select("url", "extraction")
+        scanned = with_mentions(mention_pages, surfaces, "text").select(
+            "url", "extraction"
+        )
 
         # Flatten BOTH extraction arrays in one explode and persist the
         # flat rows. Caching the nested array<struct> column instead is a
@@ -240,10 +208,7 @@ def extract_triples(
         flat = scanned.select(
             "url", F.explode(F.concat(m_structs, r_structs)).alias("x")
         ).select("url", "x.*")
-    if persist:
-        from pyspark import StorageLevel
-
-        flat = flat.persist(StorageLevel.MEMORY_AND_DISK)
+    flat = flat.persist(StorageLevel.MEMORY_AND_DISK)
 
     mentions = flat.where(F.col("kind") == "m").select(
         "url", "surface", "mstart", "mend", "exact"
@@ -286,8 +251,7 @@ def extract_triples(
 
             ctx_bonus = context_link_bonus(mention_pages, mentions, exact_map)
         fuzzy_map = link_fuzzy_mentions(
-            spark, fuzzy_surfaces, alias_table, threshold=fuzzy_threshold,
-            context_bonus=ctx_bonus,
+            spark, fuzzy_surfaces, alias_table, context_bonus=ctx_bonus
         )
         # unlinked candidates → external stubs (J7: no dangling refs),
         # except known-external surfaces on the broadcast blocklist,
@@ -330,11 +294,8 @@ def extract_triples(
         )
         .withColumn("canonical_id", F.coalesce("comp", "entity_id"))
         .select("surface", "entity_id", "canonical_id", "entity_type", "link_score")
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if persist:
-        from pyspark import StorageLevel
-
-        canon = canon.persist(StorageLevel.MEMORY_AND_DISK)
     canon_b = F.broadcast(canon)
 
     linked = mentions.join(canon_b, "surface", "left").select(
@@ -373,9 +334,8 @@ def extract_triples(
     )
 
     triples = mention_triples.unionByName(rel_triples).unionByName(link_triples)
-    if persist and persist_triples:
-        from pyspark import StorageLevel
-
+    cached = (flat, canon)
+    if persist_triples:
         # third fan-out point for GRAPH-MATERIALIZING callers (the
         # manifest runner, stats): triples feed the caller's action AND
         # the node/edge build (used_ids, stubs, edge dedup), so caching
@@ -387,16 +347,12 @@ def extract_triples(
         # cached either way, so an unpersisted rebuild re-pays only the
         # narrow dedup shuffles, never the scan UDFs.
         triples = triples.persist(StorageLevel.MEMORY_AND_DISK)
+        cached += (triples,)
 
     # one owner for the whole batch: the global graph
     nodes, edges = (
         df.drop("owner")
         for df in _materialize_graph(pages, canon, triples, F.lit(0))
-    )
-    cached = (
-        (flat, canon, triples) if (persist and persist_triples)
-        else (flat, canon) if persist
-        else ()
     )
     return GraphResult(
         triples=triples, nodes=nodes, edges=edges, mentions=linked,
@@ -423,20 +379,14 @@ def _materialize_graph(
     """
     # Page nodes carry the structured markup metadata map (E15/E4/E6:
     # title + og:* — the reference's per-entity docstring/flags analog),
-    # extracted JVM-side; absent when the pipeline ran text-only.
-    from codebased_spark.extract.metadata import page_meta_col
-
-    null_meta = F.lit(None).cast("map<string,string>")
-    meta_expr = (
-        page_meta_col(F.col("html")) if "html" in pages.columns else null_meta
-    )
+    # extracted JVM-side.
     page_nodes = pages.select(
         owner.alias("owner"),
         F.concat(F.lit("page:"), F.col("url")).alias("id"),
         F.col("url").alias("name"),
         F.lit("Page").alias("type"),
         F.col("url").alias("source_url"),
-        meta_expr.alias("meta"),
+        page_meta_col(F.col("html")).alias("meta"),
     )
     triples = triples.withColumn("owner", owner)
     # only entities actually referenced by a triple become nodes (the
@@ -492,7 +442,7 @@ def _materialize_graph(
             F.regexp_replace("id", "^page:", "").alias("name"),
             F.lit("ExternalPage").alias("type"),
             F.lit(None).cast("string").alias("source_url"),
-            null_meta.alias("meta"),
+            F.lit(None).cast("map<string,string>").alias("meta"),
         )
     )
     nodes = (

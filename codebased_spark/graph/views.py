@@ -154,7 +154,9 @@ def impact(spark: SparkSession, entity_name: str, max_hops: int = 3) -> DataFram
     start = nodes.where(F.col("name") == entity_name).select(
         F.col("id").alias("node")
     )
-    seen = start.withColumn("hops", F.lit(0))
+    # each hop's frontier and `seen` are checkpointed: without the cut,
+    # hop k's plan nests every earlier hop and isEmpty() re-runs them all
+    seen = start.withColumn("hops", F.lit(0)).localCheckpoint()
     frontier = start
     for hop in range(1, max_hops + 1):
         nxt = (
@@ -162,10 +164,10 @@ def impact(spark: SparkSession, entity_name: str, max_hops: int = 3) -> DataFram
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(seen.select("node"), "node", "left_anti")
-        )
+        ).localCheckpoint()
         if nxt.isEmpty():
             break
-        seen = seen.unionByName(nxt.withColumn("hops", F.lit(hop)))
+        seen = seen.unionByName(nxt.withColumn("hops", F.lit(hop))).localCheckpoint()
         frontier = nxt
     return (
         seen.where(F.col("hops") > 0)

@@ -26,14 +26,19 @@ def latest_captures(
     pages: DataFrame,
     url_col: str = "url",
     ts_col: str = "warc_ts",
-    content_col: str = "html",
+    content_col: str | None = None,
 ) -> DataFrame:
     """One row per url: the capture with the greatest (ts, content-hash).
+
+    The tiebreak hashes `content_col`; None picks `html` when the table
+    has it and `text` otherwise.
 
     Output keeps the input schema (column order preserved) plus
     `n_captures`, the number of captures collapsed for that url — the
     lineage counter a recrawl-dedup stage reports to the manifest.
     """
+    if content_col is None:
+        content_col = "html" if "html" in pages.columns else "text"
     payload = [c for c in pages.columns if c != url_col]
     tiebreak = F.md5(F.coalesce(F.col(content_col).cast("string"), F.lit("")))
     # struct comparison is lexicographic over its fields: ts first, then

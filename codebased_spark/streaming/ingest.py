@@ -87,12 +87,17 @@ def stream_pages_to_graph(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        res = extract_triples(spark, batch_df, gazetteer, persist=False)
-        (
-            res.triples.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+        res = extract_triples(spark, batch_df, gazetteer)
+        try:
+            (
+                res.triples.withColumn("batch_id", F.lit(batch_id))
+                .write.mode("append")
+                .parquet(out_dir)
+            )
+        finally:
+            # one (flat, canon) cache pair per micro-batch must not outlive
+            # the batch in a query that runs for the life of the session
+            res.release()
 
     writer = (
         pages_stream.writeStream.foreachBatch(process_batch)

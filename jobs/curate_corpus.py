@@ -82,8 +82,7 @@ def main(argv: list[str] | None = None) -> None:
         pages = apply_robots(pages, robots).where(F.col("allowed") == 1).drop("allowed")
 
     if "warc_ts" in pages.columns:
-        content = "html" if "html" in pages.columns else "text"
-        pages = latest_captures(pages, content_col=content).drop("n_captures")
+        pages = latest_captures(pages).drop("n_captures")
     if "html" in pages.columns:
         pages = collapse_canonical(pages).drop("src_url", "n_variants")
         pages = with_text(pages, "html", "text")

@@ -47,7 +47,7 @@ def main(argv: list[str] | None = None) -> dict:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--pages", required=True,
-                    help="parquet with (url, warc_ts, html|text, lang)")
+                    help="parquet with (url, warc_ts, html, lang)")
     ap.add_argument("--gazetteer", required=True,
                     help="parquet with (surface_form, canonical_id, entity_type[, weight])")
     ap.add_argument("--out", required=True, help="graph directory (created/updated)")
@@ -65,13 +65,12 @@ def main(argv: list[str] | None = None) -> dict:
 
     spark = get_spark("codebased-incremental-update", master=args.master)
     pages = spark.read.parquet(args.pages)
-    content = "html" if "html" in pages.columns else "text"
     if "warc_ts" in pages.columns:
-        pages = latest_captures(pages, content_col=content).drop("n_captures")
+        pages = latest_captures(pages).drop("n_captures")
 
     # narrow (url, sha) snapshot of the collapsed crawl — manifest-sized,
     # one row per url, never capture-sized (PLANS.md kg_snapshot_delta)
-    curr_snap = pages.select("url", F.sha2(F.col(content), 256).alias("content_sha"))
+    curr_snap = pages.select("url", F.sha2(F.col("html"), 256).alias("content_sha"))
     snap_path = f"{args.out}/url_snapshot"
     try:  # read-try, not a local-fs stat: --out may be HDFS/S3 on a cluster
         prev_snap = spark.read.parquet(snap_path).select("url", "content_sha")

@@ -75,8 +75,7 @@ def main(argv: list[str] | None = None) -> None:
     if args.dedupe_captures and "warc_ts" in pages.columns:
         from codebased_spark.sources.recrawl import latest_captures
 
-        content = "html" if "html" in pages.columns else "text"
-        pages = latest_captures(pages, content_col=content).drop("n_captures")
+        pages = latest_captures(pages).drop("n_captures")
 
     run = incremental_update if args.incremental else run_partitioned
     report = run(

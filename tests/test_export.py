@@ -66,7 +66,6 @@ def test_roundtrip_through_files(spark, tmp_path):
         spark,
         spark.createDataFrame(corpus.pages),
         spark.createDataFrame(corpus.gazetteer),
-        persist=False,
     )
     nt = str(tmp_path / "nt")
     bulk = str(tmp_path / "bulk")
@@ -81,3 +80,4 @@ def test_roundtrip_through_files(spark, tmp_path):
     )
     assert edges_back.count() == res.edges.count()
     assert {"src", "dst", "rel_type", "source_url"} <= set(edges_back.columns)
+    res.release()

@@ -195,10 +195,12 @@ def test_latest_captures_picks_newest_and_breaks_ties(spark):
 
 
 def test_pipeline_dedupe_captures_ignores_stale_recrawl(spark):
-    """A stale older capture of a url must not contribute triples when
-    dedupe_captures=True: output equals the single-capture run."""
+    """A stale older capture of a url must not contribute triples once
+    latest_captures runs before the pipeline: output equals the
+    single-capture run."""
     import pandas as pd
 
+    from codebased_spark.sources.recrawl import latest_captures
     from codebased_spark.synth.pages import gen_pages
 
     corpus = gen_pages(n_docs=12, n_entities=10, seed=7)
@@ -209,17 +211,19 @@ def test_pipeline_dedupe_captures_ignores_stale_recrawl(spark):
     stale["text"] = [pages.iloc[1]["text"]]
     gaz = spark.createDataFrame(corpus.gazetteer)
 
-    base = extract_triples(spark, spark.createDataFrame(pages), gaz, persist=False)
+    base = extract_triples(spark, spark.createDataFrame(pages), gaz)
     dup = extract_triples(
         spark,
-        spark.createDataFrame(pd.concat([pages, stale], ignore_index=True)),
+        latest_captures(
+            spark.createDataFrame(pd.concat([pages, stale], ignore_index=True))
+        ).drop("n_captures"),
         gaz,
-        persist=False,
-        dedupe_captures=True,
     )
     assert set(map(tuple, dup.triples.collect())) == set(
         map(tuple, base.triples.collect())
     )
+    base.release()
+    dup.release()
 
 
 def test_synth_materialized_roundtrips_generator(spark, tmp_path):

@@ -94,6 +94,36 @@ def test_stream_pages_to_graph_matches_batch(spark, corpus, tmp_path):
     assert streamed == batch
 
 
+def test_stream_pages_to_graph_releases_batch_caches(spark, tmp_path):
+    """Each micro-batch's pipeline caches are released after its write: a
+    long-running query must not hold one (flat, canon) pair per batch."""
+    from codebased_spark.synth.pages import gen_pages
+
+    corpus = gen_pages(n_docs=16, n_entities=12, seed=23)
+    pages_dir = str(tmp_path / "pages")
+    pages = spark.createDataFrame(corpus.pages)
+    pages.where(F.col("url") < "https://m").write.mode("append").parquet(pages_dir)
+    pages.where(F.col("url") >= "https://m").write.mode("append").parquet(pages_dir)
+
+    def persistent_rdd_ids() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    # compare ids, not counts: the context cleaner may unpersist RDDs that
+    # earlier tests left behind while this query runs
+    before = persistent_rdd_ids()
+
+    q = stream_pages_to_graph(
+        spark, pages_dir, PAGES_SCHEMA, spark.createDataFrame(corpus.gazetteer),
+        str(tmp_path / "triples"), str(tmp_path / "ckpt"), available_now=True,
+    )
+    try:
+        q.awaitTermination(300)
+    finally:
+        q.stop()
+    assert spark.read.parquet(str(tmp_path / "triples")).count() > 0
+    assert persistent_rdd_ids() <= before
+
+
 def test_stream_exact_dedup_matches_batch(spark, tmp_path):
     """Streaming content-hash dedup (bounded state via watermark) emits
     exactly one page per distinct content, matching batch dedup on a
