@@ -11,17 +11,28 @@ canned query library (QUERY_LIBRARY.md analogs restated over web pages).
 Read-only is structural: temp views over parquet/Iceberg reads cannot
 write (F5 — the reference needed an explicit guard because Cypher mixes
 DML into the query language; SQL SELECT over views does not).
+
+Views over a committed graph directory are cached (Spark SQL's in-memory
+columnar cache), so a served request scans the deduplicated rows instead
+of re-running read_graph's manifest gating and dedup; see register_views
+for the cache lifecycle.
 """
 
 from __future__ import annotations
 
 import re
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
 from codebased_spark.graph.manifest import read_graph
 
 DEFAULT_LIMIT = 100
+
+# session -> the (nodes, edges) frames its last register_views(out_dir=...)
+# cached; only these are ever unpersisted here. Keyed like the temp views
+# themselves, which are per-session state.
+_CACHED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 _HAS_LIMIT = re.compile(r"\blimit\s+\d+(\s+offset\s+\d+)?\s*;?\s*$", re.I)
 _IS_SELECT = re.compile(r"^\s*(select|with)\b", re.I)
@@ -63,11 +74,33 @@ def register_views(
     edges: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Create `nodes` / `edges` temp views from a committed graph directory
-    (manifest-gated, deduped — read_graph) or from in-memory DataFrames."""
+    (manifest-gated, deduped — read_graph) or from in-memory DataFrames.
+
+    Cache lifecycle of an `out_dir` registration:
+
+    - lazy: registration marks read_graph's two frames for caching and
+      runs no Spark job of its own; the first query that scans a view
+      builds its in-memory columnar copy, and every later query scans
+      that copy;
+    - released on re-register: every call first unpersists the frames the
+      session's previous `out_dir` call cached, and does so BEFORE
+      re-reading. Partition deletes go through the Hadoop FileSystem API,
+      which does not refresh Spark's cache, and the cache manager matches
+      a parquet relation by its root path, so a re-read of the same
+      directory would otherwise be answered from the stale copy. Call
+      this again after every update of the directory; until then the
+      views (and any read_graph of it) serve the cached rows;
+    - caller frames (`nodes=`, `edges=`) are registered as given: they are
+      never cached nor unpersisted here, persisting them is the caller's
+      choice.
+    """
+    if (nodes is None or edges is None) and out_dir is None:
+        raise ValueError("register_views needs out_dir or nodes+edges")
+    for df in _CACHED.pop(spark, ()):
+        df.unpersist()
     if nodes is None or edges is None:
-        if out_dir is None:
-            raise ValueError("register_views needs out_dir or nodes+edges")
-        nodes, edges = read_graph(spark, out_dir)
+        nodes, edges = (df.cache() for df in read_graph(spark, out_dir))
+        _CACHED[spark] = (nodes, edges)
     nodes.createOrReplaceTempView("nodes")
     edges.createOrReplaceTempView("edges")
     return nodes, edges

@@ -9,9 +9,14 @@ Streaming form (sessionize_stream): applyInPandasWithState — the
 arbitrary-stateful-operator API. Per user key, state holds the open
 session (start, end, n_events); each micro-batch merges its events,
 closes sessions whose gap elapsed, emits closed sessions, and keeps the
-open one in state. With Trigger.AvailableNow and one input batch, the
+open one in state. After the micro-batch that reads one input batch, the
 emitted closed sessions equal the batch twin's non-final sessions — the
-equivalence the test asserts.
+equivalence the test asserts. Trigger.AvailableNow does not end such a
+query: GroupStateTimeout.ProcessingTimeTimeout makes Spark run a no-data
+batch after every batch, forever, so neither awaitTermination() without
+a timeout nor processAllAvailable() returns. Callers wait for the batch that
+read the input (its recentProgress entry has numInputRows > 0) and then
+stop() the query, as tests/test_sessionize.py does.
 
 Scale: state lives in the state store keyed by user — O(active users)
 not O(events); the shuffle is the groupBy(user) exchange that any

@@ -16,6 +16,12 @@ surface over the Spark-built graph directory, stdlib-only
 
 Serving is driver-side BY DESIGN: the API reads a small, committed,
 deduplicated graph table; the heavy lifting happened in the pipeline.
+Requests scan the cached `nodes`/`edges` views (graph/views.py
+register_views): the first request builds their in-memory columnar copy,
+and no later request re-runs read_graph's manifest gating and dedup. The
+server therefore answers from the graph as committed when it started; an
+update of the directory is served after a restart (or a register_views
+call in the serving process).
 A production deployment would put the same routes behind a thrift/
 connect server; the query guard and view layer are the part that
 carries over unchanged.
@@ -39,7 +45,10 @@ def _rows(df):
 
 
 def make_handler(spark):
+    from pyspark.errors import AnalysisException
+
     from codebased_spark.graph import views
+    from codebased_spark.graph.manifest import graph_stats
 
     class Handler(BaseHTTPRequestHandler):
         def _send(self, code: int, payload) -> None:
@@ -57,14 +66,14 @@ def make_handler(spark):
             if self.path != "/api/graph":
                 self._send(404, {"error": "unknown route"})
                 return
-            nodes = spark.sql(
-                "SELECT type, count(*) AS n FROM nodes GROUP BY 1"
-            )
-            edges = spark.sql(
-                "SELECT rel_type, count(*) AS n FROM edges GROUP BY 1"
-            )
-            self._send(200, {"nodes_by_type": _rows(nodes),
-                             "edges_by_type": _rows(edges)})
+            # both per-type counts in one query (graph_stats)
+            stats = _rows(graph_stats(spark.table("nodes"), spark.table("edges")))
+            self._send(200, {
+                "nodes_by_type": [{"type": r["name"], "n": r["n"]}
+                                  for r in stats if r["kind"] == "node"],
+                "edges_by_type": [{"rel_type": r["name"], "n": r["n"]}
+                                  for r in stats if r["kind"] == "edge"],
+            })
 
         def do_POST(self):  # noqa: N802
             n = int(self.headers.get("Content-Length", 0))
@@ -85,9 +94,10 @@ def make_handler(spark):
                 else:
                     self._send(404, {"error": "unknown route"})
                     return
-            except (ValueError, KeyError) as e:
-                # read-only guard rejections and missing params are 400s,
-                # never 500s — the guard WORKING is not a server error
+            except (ValueError, KeyError, AnalysisException) as e:
+                # read-only guard rejections, missing params and SQL that
+                # does not parse or resolve are 400s, never 500s — the
+                # guard WORKING is not a server error
                 self._send(400, {"error": str(e)})
                 return
             self._send(200, {"rows": _rows(df)})
