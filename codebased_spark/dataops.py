@@ -2294,10 +2294,16 @@ def kg_host_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row host-skew audit (link/skew.py skew_report): key counts +
     exact integer Gini fraction over the count-sorted host dimension —
     the measurement that decides whether a join/agg needs hot-key
-    salting before it ships; gini = gini_num / gini_den exactly."""
+    salting before it ships; gini = gini_num / gini_den exactly. The
+    registry's columns are BIGINT, as in its oracle: skew_report's DECIMAL
+    Gini terms are cast back (an overflow there fails, never wraps, with
+    ANSI on)."""
     from codebased_spark.link.skew import skew_report
 
-    return skew_report(_docs(spark, sf_dir), key="source", key_alias="host")
+    rep = skew_report(_docs(spark, sf_dir), key="source", key_alias="host")
+    return rep.withColumns(
+        {c: F.col(c).cast("long") for c in ("gini_num", "gini_den")}
+    )
 
 
 def g_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -184,7 +184,7 @@ def _process_buckets(
         manifest_rows.write.mode("append").parquet(f"{out_dir}/manifest")
         # batch fully materialized (partitions + manifest written) — drop
         # the pipeline's internal caches so a many-batch incremental run
-        # doesn't accumulate one (flat, canon) cache pair per batch
+        # doesn't accumulate the pipeline's cache entries per batch
         res.release()
         done.extend(batch)
     return done

@@ -9,15 +9,22 @@ restated as Spark stages:
       → Arrow-UDF mention scan + gap-pattern relations (one pass)
       → exact link: broadcast join vs alias table (J1/J2)
       → fuzzy link: blocking join + TF-IDF char-ngram scoring (J4 upgrade)
-      → external stubs for unlinked candidates (J7 anti-join)
-      → connected components over alias edges → canonical ids (J8 fixpoint)
+      → external stubs for unlinked candidates (J7)
+      → canonical ids = the gazetteer's entity ids; only entities that
+        share a surface merge, under the minimum entity id (J8)
       → nodes/edges with deterministic sha2 uids (E11), deduped (A8)
+
+The vocabulary side (alias table, fuzzy links, stubs, canonical ids) is
+resolved once per call. Below `max_broadcast_surfaces` it is held on the
+driver: one probe job fetches the alias table, one job collects the fuzzy
+and stub rows when fuzzy candidates exist (bounded by the same guard),
+and the canonical map is a driver-built relation that every corpus-side
+consumer broadcasts.
 
 Shuffle budget (the thing that matters at 100 TB): one shuffle for the
 mention explode→join (broadcast, so none), one for the distinct on fuzzy
-surfaces (tiny), CC rounds over the *alias vocabulary* (≪ corpus size —
-distinct surfaces, not mentions), and one dedup per output table. The corpus
-itself is never shuffled: every per-document stage is map-only.
+surfaces (tiny), and one dedup per output table. The corpus itself is never
+shuffled: every per-document stage is map-only.
 """
 
 from __future__ import annotations
@@ -33,7 +40,7 @@ from codebased_spark.extract.mentions import with_mentions
 from codebased_spark.extract.metadata import page_meta_col
 from codebased_spark.extract.urlops import base_href_col, resolve_url_col
 from codebased_spark.link.alias import build_alias_table, link_fuzzy_mentions
-from codebased_spark.link.cc import connected_components
+from codebased_spark.link.cc import connected_components, min_labels
 
 MENTION_LANGS = ("en",)  # gazetteer is English; routing analog of file_types.py:47-74
 
@@ -48,7 +55,9 @@ class GraphResult:
     # owner column of their own (the manifest's buckets)
     pages: DataFrame  # the pages that became Page nodes
     canon: DataFrame  # (surface, entity_id, canonical_id, entity_type, link_score)
-    # internal persisted fan-out points (flat scan, canonical map) — SQL
+    # internal persisted fan-out points: the flat scan, the triples with
+    # persist_triples=True, and the canonical map only above the broadcast
+    # guard (below it the map is driver-built and needs no cache). SQL
     # cache entries live in the CacheManager until explicitly unpersisted,
     # so loops that run the pipeline repeatedly (benchmark warmups,
     # services, incremental batches) must release finished results or the
@@ -80,21 +89,27 @@ def extract_triples(
     """Run extraction + linking + canonicalization over pages
     `(url, html, lang, ...)`, one row per page.
 
-    Page identity is settled BEFORE this call, by the caller: for a
-    recrawled corpus, `sources.recrawl.latest_captures(pages)
-    .drop("n_captures")` first (latest capture wins per url), then
-    `sources.canonical.collapse_canonical(pages).drop("src_url",
-    "n_variants")` (declared variants collapse onto their
-    <link rel="canonical"> target), as the jobs under jobs/ do.
+    Page identity is settled BEFORE this call, by the caller. For a
+    recrawled corpus, run `sources.recrawl.latest_captures(pages)
+    .drop("n_captures")` (latest capture wins per url); for declared
+    url variants, then `sources.canonical.collapse_canonical(pages)
+    .drop("src_url", "n_variants")` (variants collapse onto their
+    <link rel="canonical"> target). jobs/curate_corpus.py runs both,
+    jobs/run_pipeline.py and jobs/incremental_update.py run
+    latest_captures only, and streaming/ingest.py runs neither.
 
-    The two fan-out points — the flat extraction output (consumed by the
-    mention-, relation- and node-building branches) and the canonical
-    surface map — are always cached at MEMORY_AND_DISK; without this
-    every downstream branch re-runs the scan UDFs over the corpus
+    The flat extraction output (consumed by the mention-, relation- and
+    node-building branches) is always cached at MEMORY_AND_DISK; without
+    this every downstream branch re-runs the scan UDFs over the corpus
     (measured 2.5x end-to-end at 20k docs). MEMORY_AND_DISK spills rather
     than OOMs on big partitions. Callers must `release()` the result once
     its DataFrames are consumed, or the cache entries live for the rest
     of the session.
+
+    Canonical ids are the gazetteer's entity ids (and `ext:` stub ids).
+    Every alias key keys one entity and fuzzy linking is top-1, so two
+    entities merge only where one surface maps to both; a merged group
+    takes its minimum entity id.
 
     `persist_triples=True` also caches the triples, for callers that
     materialize the graph from them (see the note at the persist).
@@ -105,20 +120,37 @@ def extract_triples(
     acceptance threshold stays on the name score. Off by default — it
     costs one url-keyed text re-join plus two vocabulary-sized aggs.
 
-    `max_broadcast_surfaces` guards the one driver-memory-bound step: the
-    automaton path collects the alias vocabulary for the executor-side
-    broadcast (the right plan up to ~10^6-10^7 surfaces). Above the
-    guard, the pipeline switches to the distributed dictionary JOIN scan
-    (extract/mentions_join.py) — same mention/relation semantics on
-    tokenized text, dictionary never leaves the cluster — instead of
-    OOMing the driver silently. The probe is one fused limit+collect job.
+    `max_broadcast_surfaces` bounds the rows the vocabulary side holds on
+    the driver: the alias table (the automaton's executor-side broadcast
+    and the base of the canonical map) and then the canonical map's fuzzy
+    rows, one per distinct unlinked surface, which grow with the corpus.
+    Above the guard on the alias table, the pipeline switches to the
+    distributed dictionary JOIN scan (extract/mentions_join.py) — same
+    mention/relation semantics on tokenized text, dictionary never leaves
+    the cluster — instead of OOMing the driver silently, and keeps the
+    vocabulary side distributed too (a persisted canonical map, merges by
+    connected_components). When only the fuzzy rows would overflow it, the
+    automaton scan stays and the canonical map alone is built distributed.
+    The probe is one fused limit+collect job. Measured at the default
+    guard (1 999 948 alias rows of a synthetic gazetteer, local[2], 4 GB
+    driver heap): the probe took 36 s including the alias table build,
+    turning its rows into the alias and canonical relations another 13 s,
+    and the driver's Python process grew by 1.2 GB RSS.
     """
     alias_table = build_alias_table(gazetteer)
-    # ONE probe job sizes AND fetches the vocabulary (cc.py discipline:
-    # a count-then-collect pair would pay two fixed job overheads)
-    probe = alias_table.select("alias_key").limit(max_broadcast_surfaces + 1).collect()
+    # ONE probe job sizes AND fetches the alias table (cc.py discipline:
+    # a count-then-collect pair would pay two fixed job overheads). Below
+    # the guard the collected rows become the one alias relation that the
+    # automaton, the exact map and the fuzzy scorer share, so the
+    # gazetteer is read once per call.
+    probe = alias_table.limit(max_broadcast_surfaces + 1).collect()
     use_join_scan = len(probe) > max_broadcast_surfaces
-    surfaces = [] if use_join_scan else [r.alias_key for r in probe]
+    if not use_join_scan:
+        # rows that came out of Spark need no per-row schema check (it
+        # costs seconds per million rows on the driver)
+        alias_table = spark.createDataFrame(probe, alias_table.schema, verifySchema=False)
+    # positional reads: a Row's named access is a Python-level lookup
+    surfaces = [] if use_join_scan else [r[0] for r in probe]  # alias_key
 
     # size guard before any UDF work (reference base.py:146-149 max_file_size
     # skip): pathological documents are dropped map-side, never decoded
@@ -230,18 +262,9 @@ def extract_triples(
     # short-circuit: clean corpora have no fuzzy candidates, and the TF-IDF
     # scoring stage costs several fixed jobs. fuzzy_surfaces is vocabulary-
     # sized (distinct surfaces, not mentions), so isEmpty() is cheap and
-    # doubles as the materialization point for the persisted scan. The
-    # short-circuit must replace BOTH the fuzzy map AND the stub source
-    # with empty literals: the downstream CC runs count/collect jobs over
-    # surface_map, and a corpus-scanning subtree left in the (empty)
-    # ext branch would re-execute the whole mention scan per job —
-    # measured ~7s of pure fixed cost per pipeline call.
-    if fuzzy_surfaces.isEmpty():
-        fuzzy_map = spark.createDataFrame(
-            [], "surface string, entity_id string, entity_type string, link_score double"
-        )
-        unlinked = spark.createDataFrame([], "surface string")
-    else:
+    # doubles as the materialization point for the persisted scan.
+    fuzzy_ext = None
+    if not fuzzy_surfaces.isEmpty():
         # opt-in context feature (link/context.py): corpus-wide context
         # profiles re-rank near-tied candidates; the threshold decision
         # stays name-score-gated, so default-off P/R is unaffected
@@ -251,51 +274,58 @@ def extract_triples(
 
             ctx_bonus = context_link_bonus(mention_pages, mentions, exact_map)
         fuzzy_map = link_fuzzy_mentions(
-            spark, fuzzy_surfaces, alias_table, context_bonus=ctx_bonus
+            spark, fuzzy_surfaces, alias_table, context_bonus=ctx_bonus,
+            alias_keys=None if use_join_scan else surfaces,
         )
-        # unlinked candidates → external stubs (J7: no dangling refs),
-        # except known-external surfaces on the broadcast blocklist,
-        # which are dropped entirely — the reference skips
+        # every fuzzy surface gets its top-1 link or, unlinked, an external
+        # stub (J7: no dangling refs) — except known-external surfaces on
+        # the blocklist, which are dropped entirely. The reference skips
         # @angular/rxjs/lodash prefixes before probing
         # (extractor.py:393-426); the web analog is boilerplate chrome
         # names (social widgets, cookie-banner vendors) that would
         # otherwise pollute the entity table with one stub per spelling
         # (J5).
-        unlinked = fuzzy_surfaces.join(fuzzy_map, "surface", "left_anti")
-    if external_blocklist:
-        bl = F.broadcast(
-            spark.createDataFrame(
-                [(s.lower(),) for s in external_blocklist], ["blocked"]
+        fuzzy_ext = fuzzy_surfaces.join(fuzzy_map, "surface", "left")
+        if external_blocklist:
+            fuzzy_ext = fuzzy_ext.where(
+                F.col("entity_id").isNotNull()
+                | ~F.lower("surface").isin(*sorted({b.lower() for b in external_blocklist}))
             )
+        fuzzy_ext = fuzzy_ext.select(
+            "surface",
+            F.coalesce(
+                "entity_id", F.concat(F.lit("ext:"), F.sha2(F.col("surface"), 256))
+            ).alias("entity_id"),
+            F.coalesce("entity_type", F.lit("External")).alias("entity_type"),
+            F.coalesce("link_score", F.lit(0.0)).alias("link_score"),
         )
-        unlinked = unlinked.join(
-            bl, F.lower(F.col("surface")) == F.col("blocked"), "left_anti"
-        )
-    ext_map = (
-        unlinked
-        .withColumn(
-            "entity_id", F.concat(F.lit("ext:"), F.sha2(F.col("surface"), 256))
-        )
-        .withColumn("entity_type", F.lit("External"))
-        .withColumn("link_score", F.lit(0.0))
-    )
-    surface_map = exact_map.unionByName(fuzzy_map).unionByName(ext_map)
 
-    # canonicalization: CC over alias edges (sf:surface ↔ entity id).
-    # The vocabulary is tiny relative to the corpus — CC never touches pages.
-    alias_edges = surface_map.select(
-        F.concat(F.lit("sf:"), F.col("surface")).alias("src"),
-        F.col("entity_id").alias("dst"),
-    )
-    comps = connected_components(alias_edges)
-    canon = (
-        surface_map.join(
-            comps.withColumnRenamed("id", "entity_id"), "entity_id", "left"
+    # ONE job runs the fuzzy subtree (its pandas UDF included); every
+    # consumer below then broadcasts the driver-built map. The fuzzy rows
+    # are one per distinct unlinked surface, so their number grows with
+    # the corpus: they count against the same guard as the alias rows,
+    # and a map that would outgrow it stays distributed.
+    fuzzy_rows = []
+    canon_on_driver = not use_join_scan
+    if fuzzy_ext is not None and canon_on_driver:
+        room = max_broadcast_surfaces - len(probe)
+        fuzzy_rows = fuzzy_ext.limit(room + 1).collect()
+        canon_on_driver = len(fuzzy_rows) <= room
+    if not canon_on_driver:
+        canon = _canon_distributed(exact_map, fuzzy_ext)
+        cached = (flat, canon)
+    else:
+        def rows():  # (surface, entity_id, entity_type, link_score)
+            for key, entity_id, entity_type, spec in probe:  # alias table order
+                yield key, entity_id, entity_type, None if spec is None else float(spec)
+            yield from fuzzy_rows
+
+        label = _shared_surface_labels(rows())
+        canon = spark.createDataFrame(
+            [(s, e, label.get(e, e), t, sc) for s, e, t, sc in rows()], _CANON_SCHEMA,
+            verifySchema=False,
         )
-        .withColumn("canonical_id", F.coalesce("comp", "entity_id"))
-        .select("surface", "entity_id", "canonical_id", "entity_type", "link_score")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+        cached = (flat,)
     canon_b = F.broadcast(canon)
 
     linked = mentions.join(canon_b, "surface", "left").select(
@@ -334,7 +364,6 @@ def extract_triples(
     )
 
     triples = mention_triples.unionByName(rel_triples).unionByName(link_triples)
-    cached = (flat, canon)
     if persist_triples:
         # third fan-out point for GRAPH-MATERIALIZING callers (the
         # manifest runner, stats): triples feed the caller's action AND
@@ -343,9 +372,9 @@ def extract_triples(
         # OFF by default: a triples-only consumer (the headline
         # throughput path) would pay the corpus-sized cache write for
         # nothing (measured ~25% of end-to-end at 200k docs), and at
-        # 100 TB a corpus-sized cache is a spill risk — flat/canon stay
-        # cached either way, so an unpersisted rebuild re-pays only the
-        # narrow dedup shuffles, never the scan UDFs.
+        # 100 TB a corpus-sized cache is a spill risk — flat stays cached
+        # either way, so an unpersisted rebuild re-pays only the narrow
+        # dedup shuffles, never the scan UDFs.
         triples = triples.persist(StorageLevel.MEMORY_AND_DISK)
         cached += (triples,)
 
@@ -357,6 +386,50 @@ def extract_triples(
     return GraphResult(
         triples=triples, nodes=nodes, edges=edges, mentions=linked,
         pages=pages, canon=canon, cached=cached,
+    )
+
+
+_CANON_SCHEMA = (
+    "surface string, entity_id string, canonical_id string, "
+    "entity_type string, link_score double"
+)
+
+
+def _shared_surface_labels(rows) -> dict:
+    """entity id → merged canonical id, for the entities that share a
+    surface in `rows` of (surface, entity_id, ...); the minimum entity id
+    of each merged group labels it. Entities absent from the dict keep
+    their own id."""
+    first: dict = {}  # surface -> the first entity id seen for it
+    pairs = []
+    for surface, entity_id, *_ in rows:
+        seen = first.setdefault(surface, entity_id)
+        if seen != entity_id:
+            pairs.append((seen, entity_id))
+    return min_labels(pairs)
+
+
+def _canon_distributed(exact_map: DataFrame, fuzzy_ext: DataFrame | None) -> DataFrame:
+    """The canonical map above the broadcast guard, kept off the driver:
+    the same id rule as _shared_surface_labels, with the merges solved by
+    connected_components over entity–entity edges only. Persisted, since
+    every corpus-side consumer reads it."""
+    surface_map = exact_map if fuzzy_ext is None else exact_map.unionByName(fuzzy_ext)
+    shared = (
+        surface_map.groupBy("surface")
+        .agg(F.collect_set("entity_id").alias("ids"))
+        .where(F.size("ids") > 1)
+    )
+    comps = connected_components(
+        shared.select(F.explode("ids").alias("src"), F.array_min("ids").alias("dst"))
+    )
+    return (
+        surface_map.join(
+            comps.withColumnRenamed("id", "entity_id"), "entity_id", "left"
+        )
+        .withColumn("canonical_id", F.coalesce("comp", "entity_id"))
+        .select("surface", "entity_id", "canonical_id", "entity_type", "link_score")
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
 
@@ -406,9 +479,10 @@ def _materialize_graph(
     # aliases deterministic (an entity with several exact surfaces must
     # not flip names between runs)
     # entity nodes carry per-entity metadata (E6 rich flags analog):
-    # alias-count and the best link confidence that produced the name
+    # alias-count and the best link confidence that produced the name.
+    # canon is vocabulary-sized, and the pipeline broadcasts it everywhere
     entity_nodes = (
-        canon.join(used_ids, "canonical_id")
+        F.broadcast(canon).join(used_ids, "canonical_id")
         .groupBy("owner", F.col("canonical_id").alias("id"))
         .agg(
             F.max_by(

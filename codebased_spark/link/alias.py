@@ -339,6 +339,7 @@ def link_fuzzy_mentions(
     max_broadcast_aliases: int = 2_000_000,
     context_bonus: DataFrame | None = None,
     context_weight: float = 0.1,
+    alias_keys: list[str] | None = None,
 ) -> DataFrame:
     """Link non-gazetteer mention surfaces to entities.
 
@@ -356,14 +357,20 @@ def link_fuzzy_mentions(
     still applies to the name-similarity link_score alone — context can
     re-order near-tied candidates (the reference's where-the-mention-sits
     evidence) but can never admit a link the name score would reject.
+
+    `alias_keys` — the alias table's keys, when the caller already holds
+    them on the driver (graph/pipeline.py's probe): the IDF model is built
+    from them and this function runs no probe of its own.
     """
-    probe = alias_table.select("alias_key").limit(max_broadcast_aliases + 1).collect()
-    if len(probe) > max_broadcast_aliases:
+    gaz_keys = alias_keys
+    if gaz_keys is None:
+        probe = alias_table.select("alias_key").limit(max_broadcast_aliases + 1).collect()
+        gaz_keys = [r.alias_key for r in probe]
+    if len(gaz_keys) > max_broadcast_aliases:
         return _link_fuzzy_distributed(
             spark, fuzzy, alias_table, threshold, surface_col=surface_col,
             context_bonus=context_bonus, context_weight=context_weight,
         )
-    gaz_keys = [r.alias_key for r in probe]
     idf = build_idf(gaz_keys)
     default_idf = math.log(1 + max(len(gaz_keys), 1)) + 1.0
 

@@ -27,6 +27,34 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def min_labels(pairs) -> dict:
+    """Union-find over `(a, b)` pairs: every node that appears maps to the
+    minimum node of its component. Pure Python, for edge lists already on
+    the driver."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[ra] = rb
+    comp_min: dict = {}
+    for node in parent:
+        r = find(node)
+        if r not in comp_min or node < comp_min[r]:
+            comp_min[r] = node
+    return {node: comp_min[find(node)] for node in parent}
+
+
 def _cc_driver_side(e: DataFrame, rows=None) -> DataFrame:
     """Union-find on the driver for small graphs — identical output.
 
@@ -38,30 +66,9 @@ def _cc_driver_side(e: DataFrame, rows=None) -> DataFrame:
     already-collected edge list (the adaptive probe collects while
     counting, saving a job).
     """
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
     if rows is None:
         rows = e.collect()
-    for a, b in rows:
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-    comp_min: dict = {}
-    for node in parent:
-        r = find(node)
-        if r not in comp_min or node < comp_min[r]:
-            comp_min[r] = node
-    out = [(node, comp_min[find(node)]) for node in parent]
+    out = list(min_labels(rows).items())
     # explicit schema derived from the edge column type: an empty edge set
     # must return an empty frame, not raise cannot-infer-schema
     from pyspark.sql import types as T

@@ -166,7 +166,20 @@ def skew_report(
     counts = df.groupBy(F.col(key).alias(key_alias)).agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    hist = counts.groupBy("cnt").agg(F.count(F.lit(1)).alias("m"))
+    return gini_from_histogram(
+        counts.groupBy("cnt").agg(F.count(F.lit(1)).alias("m"))
+    )
+
+
+def gini_from_histogram(hist: DataFrame) -> DataFrame:
+    """skew_report's row from the count histogram `(cnt, m)`: m keys have
+    cnt rows each.
+
+    The rank sum and both Gini terms are products of counts (s_icnt
+    reaches about n_keys * total_rows), which overflow BIGINT long before
+    total_rows does, so they are DECIMAL(38,0): exact up to 10^38, and an
+    overflow there is an error or a NULL, never a wrapped value."""
+    dec = "decimal(38,0)"
     w = (
         Window.orderBy(F.asc("cnt"))
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -174,26 +187,25 @@ def skew_report(
     blocks = hist.withColumn(
         "r", (F.coalesce(F.sum("m").over(w), F.lit(0)) + 1).cast("long")
     )
+    m = F.col("m")
+    # m*(m-1)/2 with exact BIGINT halving of whichever factor is even
+    tie_pairs = F.when(
+        m % 2 == 0, F.expr("m DIV 2").cast(dec) * (m - 1).cast(dec)
+    ).otherwise(m.cast(dec) * F.expr("(m - 1) DIV 2").cast(dec))
     return blocks.agg(
         F.sum("m").alias("n_keys"),
-        F.sum(F.col("cnt") * F.col("m")).alias("total_rows"),
+        F.sum(F.col("cnt") * m).alias("total_rows"),
         F.max("cnt").alias("max_rows"),
-        # m*(m-1) is always even, so integer DIV keeps the whole rank sum
-        # in BIGINT — `/` would route through DOUBLE and round above 2^53
         F.sum(
-            F.col("cnt")
-            * (
-                F.col("m") * F.col("r")
-                + F.expr("m * (m - 1) DIV 2")
-            )
-        ).alias("s_icnt"),
+            F.col("cnt").cast(dec) * (m.cast(dec) * F.col("r").cast(dec) + tie_pairs)
+        ).cast(dec).alias("s_icnt"),
     ).select(
         "n_keys",
         "total_rows",
         "max_rows",
         (
             F.lit(2) * F.col("s_icnt")
-            - (F.col("n_keys") + 1) * F.col("total_rows")
-        ).alias("gini_num"),
-        (F.col("n_keys") * F.col("total_rows")).alias("gini_den"),
+            - (F.col("n_keys") + 1).cast(dec) * F.col("total_rows").cast(dec)
+        ).cast(dec).alias("gini_num"),
+        (F.col("n_keys").cast(dec) * F.col("total_rows").cast(dec)).cast(dec).alias("gini_den"),
     )

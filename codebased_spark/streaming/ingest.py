@@ -95,7 +95,7 @@ def stream_pages_to_graph(
                 .parquet(out_dir)
             )
         finally:
-            # one (flat, canon) cache pair per micro-batch must not outlive
+            # the pipeline's cache entries of a micro-batch must not outlive
             # the batch in a query that runs for the life of the session
             res.release()
 

@@ -21,7 +21,10 @@ register_views): the first request builds their in-memory columnar copy,
 and no later request re-runs read_graph's manifest gating and dedup. The
 server therefore answers from the graph as committed when it started; an
 update of the directory is served after a restart (or a register_views
-call in the serving process).
+call in the serving process). Every request is answered: a request that
+does not parse or plan is a 400, and any other error (one raised while
+the query runs, or views that were never registered) is a JSON 500
+naming its class.
 A production deployment would put the same routes behind a thrift/
 connect server; the query guard and view layer are the part that
 carries over unchanged.
@@ -37,6 +40,7 @@ import argparse
 import json
 import os
 import sys
+import traceback
 from http.server import BaseHTTPRequestHandler, HTTPServer
 
 
@@ -62,27 +66,43 @@ def make_handler(spark):
         def log_message(self, *a):  # noqa: D102 - quiet test output
             pass
 
+        def _fail(self, e: Exception) -> None:
+            # e.g. a file the registered views listed that an update has
+            # since deleted (FAILED_READ_FILE.FILE_NOT_EXIST), or views
+            # that were never registered
+            traceback.print_exc()
+            self._send(500, {"error": str(e), "error_class": type(e).__name__})
+
+        def _reply(self, build, shape) -> None:
+            """Send shape(rows of build()) as a 200, or a JSON 500 naming the
+            error raised: every request gets an answer, never a closed
+            connection."""
+            try:
+                payload = shape(_rows(build()))
+            except Exception as e:  # noqa: BLE001 - the client must hear of it
+                self._fail(e)
+                return
+            self._send(200, payload)
+
         def do_GET(self):  # noqa: N802
             if self.path != "/api/graph":
                 self._send(404, {"error": "unknown route"})
                 return
             # both per-type counts in one query (graph_stats)
-            stats = _rows(graph_stats(spark.table("nodes"), spark.table("edges")))
-            self._send(200, {
-                "nodes_by_type": [{"type": r["name"], "n": r["n"]}
-                                  for r in stats if r["kind"] == "node"],
-                "edges_by_type": [{"rel_type": r["name"], "n": r["n"]}
-                                  for r in stats if r["kind"] == "edge"],
-            })
+            self._reply(
+                lambda: graph_stats(spark.table("nodes"), spark.table("edges")),
+                lambda stats: {
+                    "nodes_by_type": [{"type": r["name"], "n": r["n"]}
+                                      for r in stats if r["kind"] == "node"],
+                    "edges_by_type": [{"rel_type": r["name"], "n": r["n"]}
+                                      for r in stats if r["kind"] == "edge"],
+                },
+            )
 
         def do_POST(self):  # noqa: N802
-            n = int(self.headers.get("Content-Length", 0))
             try:
+                n = int(self.headers.get("Content-Length", 0))
                 req = json.loads(self.rfile.read(n) or b"{}")
-            except json.JSONDecodeError:
-                self._send(400, {"error": "bad json"})
-                return
-            try:
                 if self.path == "/api/query":
                     df = views.sql(spark, req["sql"])
                 elif self.path == "/api/pages_mentioning":
@@ -92,15 +112,22 @@ def make_handler(spark):
                         spark, req["entity"], req.get("rel_type")
                     )
                 else:
-                    self._send(404, {"error": "unknown route"})
-                    return
+                    df = None
             except (ValueError, KeyError, AnalysisException) as e:
-                # read-only guard rejections, missing params and SQL that
-                # does not parse or resolve are 400s, never 500s — the
-                # guard WORKING is not a server error
+                # bad json, read-only guard rejections, missing params and
+                # SQL that does not parse or resolve are 400s, never 500s —
+                # the guard WORKING is not a server error. Only the request's
+                # parsing and planning count: an error while the query runs
+                # is the server's.
                 self._send(400, {"error": str(e)})
                 return
-            self._send(200, {"rows": _rows(df)})
+            except Exception as e:  # noqa: BLE001 - the client must hear of it
+                self._fail(e)
+                return
+            if df is None:
+                self._send(404, {"error": "unknown route"})
+                return
+            self._reply(lambda: df, lambda rows: {"rows": rows})
 
     return Handler
 

@@ -247,3 +247,100 @@ def test_fuzzy_linker_distributed_matches_closure_path(spark, corpus):
     for s, (eid, score) in closure.items():
         assert dist[s][0] == eid
         assert abs(dist[s][1] - score) < 1e-9, (s, score, dist[s][1])
+
+
+def _wikidata_gazetteer(spark):
+    """Entity ids that sort after the "sf:" prefix a surface node would
+    carry, so no id can win a min-label contest against a surface."""
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "surface_form": ["Acme Corporation", "Globex"],
+                "canonical_id": ["wd:Q1", "wd:Q2"],
+                "entity_type": ["Org", "Org"],
+                "weight": [1.0, 1.0],
+            }
+        )
+    )
+
+
+def _acme_pages(spark):
+    from codebased_spark.synth.pages import pages_from_documents
+
+    docs = pd.DataFrame(
+        {
+            "doc_id": [0, 1],
+            "text": [
+                "Acme Corporation acquired Globex last spring.",
+                "Acme opened a new plant near Zorblax Media.",
+            ],
+            "lang": ["en", "en"],
+            "source": ["wire", "wire"],
+        }
+    )
+    return spark.createDataFrame(pages_from_documents(docs))
+
+
+def _entity_ids(nodes, edges):
+    ids = {r.id for r in nodes.where("type = 'Org'").collect()}
+    rel = {(r.src, r.rel_type, r.dst) for r in edges.where("rel_type = 'ACQUIRED'").collect()}
+    return ids, rel
+
+
+def test_node_ids_are_gazetteer_ids(spark, tmp_path):
+    """Canonical ids are the gazetteer's entity ids, whatever they sort
+    against: a surface node never renames an entity."""
+    from codebased_spark.graph.manifest import read_graph, run_partitioned
+    from codebased_spark.graph.pipeline import extract_triples
+
+    gaz, pages = _wikidata_gazetteer(spark), _acme_pages(spark)
+    want = ({"wd:Q1", "wd:Q2"}, {("wd:Q1", "ACQUIRED", "wd:Q2")})
+
+    res = extract_triples(spark, pages, gaz)
+    objs = {r.obj for r in res.triples.where("pred = 'MENTIONS'").collect()}
+    assert {"wd:Q1", "wd:Q2"} <= objs
+    assert not [o for o in objs if o.startswith("sf:")]
+    assert _entity_ids(res.nodes, res.edges) == want
+    res.release()
+
+    out = str(tmp_path / "graph")
+    run_partitioned(spark, pages, gaz, out, n_buckets=2, batch_size=2)
+    assert _entity_ids(*read_graph(spark, out)) == want
+
+
+def test_entities_merge_only_through_a_shared_surface(spark):
+    """Two entity ids that one surface maps to merge under the minimum
+    entity id, transitively; entities with disjoint surfaces keep their
+    own ids. The driver rule and the distributed one (above the
+    broadcast guard) agree."""
+    from codebased_spark.graph.pipeline import _canon_distributed, _shared_surface_labels
+
+    exact = [
+        ("Acme", "wd:Q9", "Org", 1.0),
+        ("Acme Corp", "wd:Q3", "Org", 1.0),
+        ("Initech", "wd:Q5", "Org", 1.0),
+        ("Initrode", "wd:Q5", "Org", 0.8),
+        ("Umbrella", "wd:Q8", "Org", 1.0),
+    ]
+    fuzzy = [  # fuzzy links and stubs that share a spelling with another entity
+        ("Acme", "wd:Q3", "Org", 0.7),
+        ("Umbrela", "wd:Q7", "Org", 0.6),
+        ("Umbrela", "wd:Q9", "Org", 0.6),
+        ("Zorblax", "ext:zz", "External", 0.0),
+    ]
+    want = {
+        "wd:Q3": "wd:Q3", "wd:Q7": "wd:Q3", "wd:Q9": "wd:Q3",
+        "wd:Q5": "wd:Q5", "wd:Q8": "wd:Q8", "ext:zz": "ext:zz",
+    }
+    label = _shared_surface_labels(exact + fuzzy)
+    assert {e: label.get(e, e) for e in want} == want
+
+    schema = "surface string, entity_id string, entity_type string, link_score double"
+    canon = _canon_distributed(
+        spark.createDataFrame(exact, schema), spark.createDataFrame(fuzzy, schema)
+    )
+    try:
+        got = {(r.surface, r.entity_id): r.canonical_id for r in canon.collect()}
+    finally:
+        canon.unpersist()
+    assert got == {(s, e): want[e] for s, e, _, _ in exact + fuzzy}

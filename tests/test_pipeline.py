@@ -129,21 +129,53 @@ def test_join_scan_fallback_matches_automaton_path(spark, corpus):
     assert m_a == m_b
 
 
+def test_fuzzy_rows_count_against_the_broadcast_guard(spark, corpus, result):
+    """The canonical map holds one row per alias key plus one per distinct
+    fuzzy surface, and the fuzzy rows grow with the corpus. A guard with
+    room for the alias table but not for the fuzzy rows keeps the
+    automaton scan and builds the map distributed (a persisted cache
+    entry), with the same graph."""
+    from pyspark.sql import functions as F
+
+    from codebased_spark.link.alias import build_alias_table
+
+    normal, _ = result
+    n_fuzzy = normal.mentions.where(~F.col("exact")).select("surface").distinct().count()
+    assert n_fuzzy > 0, "fixture has no fuzzy surfaces"
+    pages = spark.createDataFrame(corpus.pages)
+    gaz = spark.createDataFrame(corpus.gazetteer)
+    tight = extract_triples(
+        spark, pages, gaz, max_broadcast_surfaces=build_alias_table(gaz).count()
+    )
+    try:
+        assert len(tight.cached) == 2 and tight.cached[1] is tight.canon
+        assert set(map(tuple, tight.triples.collect())) == set(
+            map(tuple, normal.triples.collect())
+        )
+        cols = ("id", "uid", "name", "type")
+        assert set(map(tuple, tight.nodes.select(*cols).collect())) == set(
+            map(tuple, normal.nodes.select(*cols).collect())
+        )
+    finally:
+        tight.release()
+
+
 def test_release_unpersists_internal_caches(spark, corpus):
     """GraphResult.release() must drop the pipeline's persisted fan-out
-    points (flat scan, canonical map, and — for graph-materializing
-    callers — triples) from the CacheManager; repeated pipeline runs in
-    one session (benchmark warmups, services) previously accumulated
-    cache entries for the life of the session. A triples-only caller
-    (default) must NOT pay the triples cache write."""
+    points (flat scan and — for graph-materializing callers — triples)
+    from the CacheManager; repeated pipeline runs in one session
+    (benchmark warmups, services) previously accumulated cache entries
+    for the life of the session. A triples-only caller (default) must NOT
+    pay the triples cache write. Below the broadcast guard the canonical
+    map is driver-built, so it is no cache entry."""
     pages = spark.createDataFrame(corpus.pages)
     gaz = spark.createDataFrame(corpus.gazetteer)
     lean = extract_triples(spark, pages, gaz)
-    assert len(lean.cached) == 2  # flat + canon only
+    assert len(lean.cached) == 1  # flat only
     lean.release()
     res = extract_triples(spark, pages, gaz, persist_triples=True)
     res.triples.count()
-    assert len(res.cached) == 3
+    assert len(res.cached) == 2 and res.cached[1] is res.triples
     assert all(df.storageLevel.useMemory or df.storageLevel.useDisk for df in res.cached)
     res.release()
     assert all(

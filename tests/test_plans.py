@@ -113,6 +113,30 @@ def test_join_scan_no_rowwise_python_and_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in p
 
 
+def test_pipeline_outputs_read_no_vocabulary_plan(spark, corpus):
+    """Below the broadcast guard the vocabulary is resolved once per
+    extract_triples call, on the driver: the optimized plans of the
+    corpus-side outputs contain no scan of the gazetteer (its columns
+    surface_form/weight) and no connected-components join (its `comp`
+    label), cached subplans included (an InMemoryRelation prints the plan
+    it caches)."""
+    import re
+
+    from codebased_spark.graph.pipeline import extract_triples
+
+    pages = spark.createDataFrame(corpus.pages)
+    gaz = spark.createDataFrame(corpus.gazetteer)
+    for kwargs in ({}, {"persist_triples": True}):
+        res = extract_triples(spark, pages, gaz, **kwargs)
+        try:
+            for name in ("triples", "nodes", "edges"):
+                p = getattr(res, name)._jdf.queryExecution().optimizedPlan().toString()
+                assert not re.search(r"\b(surface_form|weight)#", p), name
+                assert not re.search(r"\bcomp#", p), name
+        finally:
+            res.release()
+
+
 def test_chunking_is_map_only(spark):
     from codebased_spark.textops.chunk import chunk_documents
 

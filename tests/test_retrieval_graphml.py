@@ -187,6 +187,27 @@ def test_skew_report_histogram_form_matches_per_key_ranks(spark):
     assert (r.gini_num, r.gini_den) == (2 * s_icnt - (n + 1) * T, n * T)
 
 
+def test_skew_gini_exact_past_bigint(spark):
+    """The Gini terms are products of counts: with 2^31 keys of 2^31 rows
+    each plus one 2^32-row key (2^62 + 2^32 rows, inside BIGINT), the
+    rank sum and both Gini terms exceed 2^63 and must come out exact."""
+    from codebased_spark.link.skew import gini_from_histogram
+
+    hist = [(2**31, 2**31), (2**32, 1)]  # (cnt, m): m keys of cnt rows
+    r = gini_from_histogram(
+        spark.createDataFrame(hist, "cnt long, m long")
+    ).collect()[0]
+    n = sum(m for _, m in hist)
+    T = sum(c * m for c, m in hist)
+    s_icnt, rank = 0, 1
+    for c, m in sorted(hist):
+        s_icnt += c * (m * rank + m * (m - 1) // 2)
+        rank += m
+    assert T < 2**63 < min(s_icnt, n * T)
+    assert (r.n_keys, r.total_rows, r.max_rows) == (n, T, 2**32)
+    assert (r.gini_num, r.gini_den) == (2 * s_icnt - (n + 1) * T, n * T)
+
+
 def test_hub_ablation_shatters_star(spark):
     from codebased_spark.graph.ablation import hub_ablation
 

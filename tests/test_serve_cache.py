@@ -272,3 +272,47 @@ def test_bad_sql_is_a_400(spark, graph, server):
     assert status == 400 and "no_such_col" in body["error"]
     status, body = _request(port, "/api/query", {"sql": "SELECT FROM WHERE nodes"})
     assert status == 400 and body["error"]
+
+
+def test_server_error_is_a_json_500(spark, corpus_gaz, graph, server, tmp_path):
+    """A request that fails for a reason other than the client's gets a
+    JSON 500 naming the error class, never a closed connection. Here the
+    views were registered over a directory before a tombstone-only update
+    deleted one bucket's files, and are queried without re-registering."""
+    port, _ = server
+    out = str(tmp_path / "graph")
+    shutil.copytree(graph, out)
+    pages_b = with_bucket(spark.createDataFrame(corpus_gaz.pages), N_BUCKETS)
+    victim = pages_b.first().bucket
+    register_views(spark, out_dir=out)  # lazy: lists the files, reads none
+    rep = incremental_update(
+        spark, pages_b.where(F.col("bucket") != victim).drop("bucket"),
+        spark.createDataFrame(corpus_gaz.gazetteer), out,
+        n_buckets=N_BUCKETS, batch_size=N_BUCKETS,
+    )
+    assert rep.buckets_deleted == [victim]
+    for route, payload in (("/api/graph", None), ("/api/query", {"sql": JOIN_SQL})):
+        status, body = _request(port, route, payload)
+        assert status == 500, (route, body)
+        assert body["error_class"] and "FILE_NOT_EXIST" in body["error"], (route, body)
+    # the server keeps answering, and a re-registration serves the update
+    register_views(spark, out_dir=out)
+    status, _ = _request(port, "/api/graph")
+    assert status == 200
+
+
+def test_missing_views_are_a_500(spark, graph, server):
+    """Views the server never registered are its own fault, not the
+    client's: GET /api/graph answers a JSON 500, not a 400."""
+    port, _ = server
+    register_views(spark, out_dir=graph)
+    try:
+        spark.catalog.dropTempView("nodes")
+        status, body = _request(port, "/api/graph")
+        assert status == 500, body
+        assert body["error_class"] == "AnalysisException", body
+        assert "TABLE_OR_VIEW_NOT_FOUND" in body["error"], body
+    finally:
+        register_views(spark, out_dir=graph)
+    status, _ = _request(port, "/api/graph")
+    assert status == 200
